@@ -6,15 +6,33 @@ rows, ``/root/reference/geobeam/fn.py:224-247``) and follows the same
 two-level granularity design: coarse I/O unit (clip) -> exploded logical
 rows (frames), SURVEY.md §3.2.
 
-Everything here is higher-order array expressions (transform/slice/
+The column functions are higher-order array expressions (transform/slice/
 aggregate) — JVM-side, no Python, no extra shuffle: the explode multiplies
-rows but stays within the same stage until the next aggregate.
+rows but stays within the same stage until the next aggregate. The numpy
+kernels below them (FFT, resampling, augmentation, re-encode) run per clip
+through ``functions.decode.clip_kernel``, one decode + kernel pass per clip.
 """
 
 from __future__ import annotations
 
+import math
+import zlib
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+)
+
+from dataflow_geobeam_spark import codecs
+from dataflow_geobeam_spark.functions.decode import _payload, _payload_field, clip_kernel
 
 
 def frame_starts(pcm: Column, frame: Column, hop: Column) -> Column:
@@ -62,11 +80,6 @@ def explode_frames(
     ).drop(pcm_col)
 
 
-def dc_offset(pcm: Column) -> Column:
-    """Mean sample value (should be ~0 for healthy audio)."""
-    return F.aggregate(pcm, F.lit(0.0), lambda a, v: a + v.cast("double")) / F.size(pcm)
-
-
 def zero_crossing_rate(pcm: Column) -> Column:
     """Fraction of adjacent sample pairs with a sign change — cheap
     voiced/unvoiced discriminator, all in zip_with."""
@@ -105,6 +118,45 @@ def silence_ratio(pcm: Column, threshold: float = 0.01) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# Per-clip pieces shared by the kernels below (all run through
+# decode.clip_kernel: decode, per-clip numpy kernel, Arrow batch out)
+# ---------------------------------------------------------------------------
+
+
+def _clip_key(clip) -> int:
+    """Per-clip random-source key: crc32 of the clip id (``key_col``)."""
+    return zlib.crc32(clip.key.encode("utf-8"))
+
+
+def _pcm16(y):
+    """F11/F15 int16 quantization: clip to [-1, 1], *32767, round-half-even."""
+    return np.round(np.clip(y, -1.0, 1.0) * 32767.0).astype("<i2")
+
+
+def _pcm16_row(clip, digest: bool) -> tuple:
+    """(decoded rate, n_samples, PCM16 bytes of the clip or their md5)."""
+    q = _pcm16(clip.pcm)
+    return int(clip.sr), int(q.shape[0]), _payload(q.tobytes(), digest)
+
+
+def _wav_row(y, sr_hz: int, digest: bool) -> tuple:
+    """(n_samples, RIFF/WAVE PCM16 bytes of ``y`` or their md5)."""
+    return y.shape[0], _payload(codecs.encode_wav(y, sr_hz), digest)
+
+
+def _rounded_vector(kernel):
+    """per_clip for ``kernel(pcm, sr) -> 1-D float64 array | None``: one row
+    holding the vector, each element rounded to 6 like Spark's round; a
+    ``None`` (sub-frame clip) gives a NULL."""
+
+    def per_clip(c):
+        v = kernel(c.pcm, c.sr)
+        return [(None if v is None else (np.floor(v * 1e6 + 0.5) / 1e6).tolist(),)]
+
+    return per_clip
+
+
+# ---------------------------------------------------------------------------
 # Round-2: spectral features (FFT-based — numpy kernel, not Catalyst)
 # ---------------------------------------------------------------------------
 
@@ -114,10 +166,9 @@ def spectral_features_np(pcm, sr_hz: int, rolloff_pct: float = 0.85):
 
     Shared by the Spark kernel AND the golden-fixture generator, so the
     oracle is the same arithmetic on the same decoded samples. Silent or
-    empty clips return (0, 0, 0).
+    empty clips return (0, 0, 0); a clip with a zero sample rate has no
+    frequency axis and returns None (a NULL row in the Spark kernel).
     """
-    import numpy as np
-
     x = np.asarray(pcm, dtype=np.float64)
     if x.size == 0:
         return 0.0, 0.0, 0.0
@@ -125,6 +176,8 @@ def spectral_features_np(pcm, sr_hz: int, rolloff_pct: float = 0.85):
     total = mag.sum()
     if total <= 0:
         return 0.0, 0.0, 0.0
+    if not sr_hz:
+        return None
     freqs = np.fft.rfftfreq(x.size, d=1.0 / sr_hz)
     centroid = float((freqs * mag).sum() / total)
     bandwidth = float(np.sqrt((((freqs - centroid) ** 2) * mag).sum() / total))
@@ -146,51 +199,18 @@ def with_spectral_metrics(
     kernel is numpy rfft, Arrow in/out, zero per-row Python objects beyond
     the decode registry call.
     """
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    spectral_fields = [
-        StructField("spectral_centroid_hz", DoubleType()),
-        StructField("spectral_bandwidth_hz", DoubleType()),
-        StructField("spectral_rolloff_hz", DoubleType()),
-    ]
-    out_schema = StructType(keep + spectral_fields)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            cent, bw, roll = [], [], []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    f0, f1, f2 = spectral_features_np(pcm, sr or _sr)
-                    cent.append(f0), bw.append(f1), roll.append(f2)
-                except Exception:  # noqa: BLE001 - decode failure => nulls
-                    cent.append(None), bw.append(None), roll.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [
-                pa.array(cent, type=pa.float64()),
-                pa.array(bw, type=pa.float64()),
-                pa.array(roll, type=pa.float64()),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                names=keep_names
-                + ["spectral_centroid_hz", "spectral_bandwidth_hz", "spectral_rolloff_hz"],
-            )
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_kernel(
+        df,
+        lambda c: [spectral_features_np(c.pcm, c.sr) or (None, None, None)],
+        [
+            StructField("spectral_centroid_hz", DoubleType()),
+            StructField("spectral_bandwidth_hz", DoubleType()),
+            StructField("spectral_rolloff_hz", DoubleType()),
+        ],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -224,8 +244,6 @@ def fingerprint_np(pcm, sr_hz: int):
     training-data dedup family (SURVEY.md section 8) applied to the audio
     payload axis.
     """
-    import numpy as np
-
     x = np.asarray(pcm, dtype=np.float64)
     frame = int(round(sr_hz * FP_FRAME_SEC))
     hop = frame // 2
@@ -256,50 +274,22 @@ def with_fingerprints(
     payload column in the same pass (shuffle-weight hygiene, same
     contract as with_spectral_metrics). Decode failure or a clip too
     short to frame => NULL fp (F1/make_valid semantics)."""
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+    def per_clip(c):
+        toks = fingerprint_np(c.pcm, c.sr)
+        return [(toks.tolist(), toks.size) if toks.size else (None, None)]
 
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_schema = StructType(
-        keep
-        + [
+    return clip_kernel(
+        df,
+        per_clip,
+        [
             StructField("fp", ArrayType(IntegerType())),
             StructField("n_tokens", IntegerType()),
-        ]
+        ],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            fps, n_toks = [], []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    toks = fingerprint_np(pcm, sr or _sr)
-                    if toks.size == 0:
-                        fps.append(None), n_toks.append(None)
-                    else:
-                        fps.append(toks.tolist()), n_toks.append(toks.size)
-                except Exception:  # noqa: BLE001 - decode failure => nulls
-                    fps.append(None), n_toks.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [
-                pa.array(fps, type=pa.list_(pa.int32())),
-                pa.array(n_toks, type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + ["fp", "n_tokens"])
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -326,8 +316,6 @@ def resample_linear_np(pcm, sr_in: int, sr_out: int):
     Returns float64. Identity when sr_in == sr_out (same length, cast
     only). Empty input or non-positive rates return an empty array.
     """
-    import numpy as np
-
     x = np.asarray(pcm, dtype=np.float64)
     if x.size == 0 or sr_in <= 0 or sr_out <= 0:
         return np.zeros(0)
@@ -363,65 +351,19 @@ def with_resampled_pcm16(
     This is the sr-normalization stage an ASR training pipeline runs
     before feature extraction — heterogeneous crawl audio in, uniform
     sample rate out."""
-    import hashlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
+    def per_clip(c):
+        q = _pcm16(resample_linear_np(c.pcm, c.sr, target_sr))
+        return [(_payload(q.tobytes(), digest), q.size)]
+
+    return clip_kernel(
+        df,
+        per_clip,
+        [_payload_field("pcm16", digest), StructField("n_samples", IntegerType())],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_field = (
-        StructField("pcm16_md5", StringType())
-        if digest
-        else StructField("pcm16", BinaryType())
-    )
-    out_schema = StructType(
-        keep
-        + [
-            out_field,
-            StructField("n_samples", IntegerType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            outs, ns = [], []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    y = resample_linear_np(pcm, sr or _sr, target_sr)
-                    q = np.round(np.clip(y, -1.0, 1.0) * 32767.0).astype("<i2")
-                    raw = q.tobytes()
-                    outs.append(hashlib.md5(raw).hexdigest() if digest else raw)
-                    ns.append(q.size)
-                except Exception:  # noqa: BLE001 - decode failure => nulls
-                    outs.append(None), ns.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [
-                pa.array(outs, type=pa.string() if digest else pa.binary()),
-                pa.array(ns, type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -437,14 +379,10 @@ MEL_FLOOR = 1e-10
 
 
 def _hz_to_mel(f):
-    import numpy as np
-
     return 2595.0 * np.log10(1.0 + f / 700.0)
 
 
 def _mel_to_hz(m):
-    import numpy as np
-
     return 700.0 * (10.0 ** (m / 2595.0) - 1.0)
 
 
@@ -464,8 +402,6 @@ def mel_filters(sr: int = MEL_SR, frame: int = MEL_FRAME, n_mels: int = MEL_N):
     hit = _MEL_FILTER_CACHE.get(key)
     if hit is not None:
         return hit
-    import numpy as np
-
     n_bins = frame // 2 + 1
     freqs = np.fft.rfftfreq(frame, d=1.0 / sr)
     pts = _mel_to_hz(np.linspace(_hz_to_mel(MEL_F_LO), _hz_to_mel(MEL_F_HI), n_mels + 2))
@@ -495,8 +431,6 @@ def logmel_frames_np(pcm, sr_hz: int):
     bins, log10(E + MEL_FLOOR). Every fold is sequential so engine and
     mirror are bit-identical.
     """
-    import numpy as np
-
     y = resample_linear_np(pcm, sr_hz, MEL_SR)
     if y.size < MEL_FRAME:
         return None
@@ -525,8 +459,6 @@ def mel_mean_np(pcm, sr_hz: int):
     frames / n_frames (sequential fold, bit-identical to the mirror).
     Returns None if the clip yields no full frame.
     """
-    import numpy as np
-
     logE = logmel_frames_np(pcm, sr_hz)
     if logE is None:
         return None
@@ -553,8 +485,6 @@ def dct2_basis(n_mfcc: int = MFCC_N, n_mels: int = MEL_N):
     hit = _DCT_BASIS_CACHE.get(key)
     if hit is not None:
         return hit
-    import numpy as np
-
     m = np.arange(n_mels, dtype=np.float64)
     k = np.arange(n_mfcc, dtype=np.float64)[:, None]
     basis = np.cos(np.pi * (m + 0.5) * k / float(n_mels))
@@ -569,8 +499,6 @@ def mfcc_mean_np(pcm, sr_hz: int):
     n_frames. The cepstral stage of the classic ASR feature chain
     (decode -> resample -> log-mel -> MFCC); returns None if the clip
     yields no full frame."""
-    import numpy as np
-
     logE = logmel_frames_np(pcm, sr_hz)
     if logE is None:
         return None
@@ -606,8 +534,6 @@ def frame_rms_np(pcm, sr_hz: int, frame_ms: int = 100, hop_ms: int = 50):
     fold stays hash-gated by `audio_frame_rms` (cross-implementation:
     Catalyst vs the generation-time numpy mirror); this kernel equals it
     by the shared arithmetic spec, pinned by tests."""
-    import numpy as np
-
     frame = max(1, int(sr_hz * frame_ms / 1000))
     hop = max(1, int(sr_hz * hop_ms / 1000))
     n = pcm.shape[0]
@@ -634,13 +560,13 @@ def with_frame_rms(
     payload column. Decode failure or a sub-frame clip => NULL. Explode
     downstream with ``posexplode(frame_rms_arr)`` for (frame_idx,
     frame_rms) rows."""
-    return _with_clip_vector(
+    return clip_kernel(
         df,
-        lambda pcm, sr: frame_rms_np(pcm, sr, frame_ms, hop_ms),
-        "frame_rms_arr",
-        bytes_col,
-        codec_col,
-        sr_col,
+        _rounded_vector(lambda pcm, sr: frame_rms_np(pcm, sr, frame_ms, hop_ms)),
+        [StructField("frame_rms_arr", ArrayType(DoubleType()))],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
 
 
@@ -690,19 +616,19 @@ def with_speech_segments(
     SURVEY.md F2). ``digest=True`` emits ``n_bytes`` + ``seg_md5``
     (Catalyst-identical length/md5 of the wav chunk) instead of the
     chunk itself — see with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
+    def per_clip(c):
+        rms = frame_rms_np(c.pcm, c.sr, frame_ms, hop_ms)
+        if rms is None:
+            return []
+        rms = np.floor(rms * 1e6 + 0.5) / 1e6  # gate-identical doubles
+        frame = max(1, int(c.sr * frame_ms / 1000))
+        hop = max(1, int(c.sr * hop_ms / 1000))
+        rows = []
+        for k, (a, b) in enumerate(segment_spans_np(rms, frame_ms, hop_ms)):
+            wav = codecs.encode_wav(c.pcm[a * hop : b * hop + frame], c.sr)
+            tail = (len(wav), _payload(wav, digest)) if digest else (wav,)
+            rows.append((k + 1, a * hop_ms, b * hop_ms + frame_ms, *tail))
+        return rows
 
     tail_fields = (
         [
@@ -712,112 +638,21 @@ def with_speech_segments(
         if digest
         else [StructField("seg_bytes", BinaryType(), False)]
     )
-    out_schema = StructType(
+    return clip_kernel(
+        df,
+        per_clip,
         [
-            StructField(id_col, StringType(), False),
             StructField("seg_idx", LongType(), False),
             StructField("start_ms", LongType(), False),
             StructField("end_ms", LongType(), False),
         ]
-        + tail_fields
+        + tail_fields,
+        keep=[StructField(id_col, StringType(), False)],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+        on_fail=[],
     )
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_seg, out_a, out_b, out_bytes = [], [], [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no rows
-                    continue
-                sr = sr or _sr
-                rms = frame_rms_np(pcm, sr, frame_ms, hop_ms)
-                if rms is None:
-                    continue
-                rms = np.floor(rms * 1e6 + 0.5) / 1e6  # gate-identical doubles
-                frame = max(1, int(sr * frame_ms / 1000))
-                hop = max(1, int(sr * hop_ms / 1000))
-                for k, (a, b) in enumerate(segment_spans_np(rms, frame_ms, hop_ms)):
-                    span = pcm[a * hop : b * hop + frame]
-                    out_id.append(cid)
-                    out_seg.append(k + 1)
-                    out_a.append(a * hop_ms)
-                    out_b.append(b * hop_ms + frame_ms)
-                    out_bytes.append(codecs.encode_wav(span, sr))
-            arrays = [
-                pa.array(out_id, type=pa.string()),
-                pa.array(out_seg, type=pa.int64()),
-                pa.array(out_a, type=pa.int64()),
-                pa.array(out_b, type=pa.int64()),
-            ]
-            if digest:
-                arrays.append(pa.array([len(w) for w in out_bytes], type=pa.int64()))
-                arrays.append(
-                    pa.array(
-                        [hashlib.md5(w).hexdigest() for w in out_bytes],
-                        type=pa.string(),
-                    )
-                )
-            else:
-                arrays.append(pa.array(out_bytes, type=pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
-
-
-def _with_clip_vector(df, kernel, out_col: str, bytes_col: str, codec_col: str, sr_col: str):
-    """Shared decode -> per-clip float-vector mapInArrow pass: appends
-    ``out_col`` (array<double>, each element rounded to 6 like Spark's
-    round) and drops the payload column. Decode failure or a sub-frame
-    clip => NULL. ``kernel(pcm, sr) -> 1-D float64 array | None``."""
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_schema = StructType(keep + [StructField(out_col, ArrayType(DoubleType()))])
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            outs = []
-            for buf, c, sr in zip(bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                    v = kernel(pcm, sr or _sr)
-                    outs.append(
-                        None
-                        if v is None
-                        else (np.floor(v * 1e6 + 0.5) / 1e6).tolist()
-                    )
-                except Exception:  # noqa: BLE001 - decode failure => null
-                    outs.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays.append(pa.array(outs, type=pa.list_(pa.float64())))
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + [out_col])
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def with_mel_means(
@@ -827,7 +662,14 @@ def with_mel_means(
     ``mel_mean`` (array<double>, length MEL_N, each element rounded to 6
     like Spark's round) and drops the payload column. Decode failure or
     a sub-frame clip => NULL."""
-    return _with_clip_vector(df, mel_mean_np, "mel_mean", bytes_col, codec_col, sr_col)
+    return clip_kernel(
+        df,
+        _rounded_vector(mel_mean_np),
+        [StructField("mel_mean", ArrayType(DoubleType()))],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+    )
 
 
 def with_mfcc_means(
@@ -837,7 +679,14 @@ def with_mfcc_means(
     pass: appends ``mfcc_mean`` (array<double>, length MFCC_N, round-6)
     and drops the payload column. Decode failure or a sub-frame clip =>
     NULL."""
-    return _with_clip_vector(df, mfcc_mean_np, "mfcc_mean", bytes_col, codec_col, sr_col)
+    return clip_kernel(
+        df,
+        _rounded_vector(mfcc_mean_np),
+        [StructField("mfcc_mean", ArrayType(DoubleType()))],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -897,8 +746,6 @@ def pitch_stats_np(pcm, sr_hz: int):
     Output: mean f0 over voiced frames (left-to-right fold; 0.0 if no
     voiced frame) and voiced_ratio = n_voiced / n_frames.
     """
-    import numpy as np
-
     y = resample_linear_np(pcm, sr_hz, PITCH_SR)
     seg = PITCH_W + PITCH_LAG_HI
     if y.size < seg:
@@ -947,8 +794,13 @@ def with_pitch_stats(
     pass: appends ``pitch_stats`` (array<double> [f0_mean_hz,
     voiced_ratio], round-6) and drops the payload column. Decode failure
     or a sub-segment clip => NULL."""
-    return _with_clip_vector(
-        df, pitch_stats_np, "pitch_stats", bytes_col, codec_col, sr_col
+    return clip_kernel(
+        df,
+        _rounded_vector(pitch_stats_np),
+        [StructField("pitch_stats", ArrayType(DoubleType()))],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
     )
 
 
@@ -980,10 +832,6 @@ def augment_noise_np(pcm, key: int, snr_db: float = 15.0):
     * ``out[i] = clip(x[i] + a*noise[i], -1, 1)`` — elementwise IEEE ops,
       order-free.
     """
-    import math
-
-    import numpy as np
-
     x = np.asarray(pcm, dtype=np.float64)
     if x.size == 0:
         return x
@@ -1023,65 +871,17 @@ def with_augmented_noise(
       the payload: callers that only hash the output stop shipping
       ~100 KB/row back across Arrow and through the plan.
     """
-    import hashlib
-    import zlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return clip_kernel(
+        df,
+        lambda c: [_wav_row(augment_noise_np(c.pcm, _clip_key(c), snr_db), c.sr, digest)],
+        [StructField("n_samples", LongType(), False), _payload_field("aug", digest, False)],
+        keep=[StructField(id_col, StringType(), False)] + [df.schema[c] for c in passthrough],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+        key_col=id_col,
+        on_fail=[],
     )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    pass_fields = [df.schema[c] for c in passthrough]
-    out_field = (
-        StructField("aug_md5", StringType(), False)
-        if digest
-        else StructField("aug", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [StructField(id_col, StringType(), False)]
-        + pass_fields
-        + [StructField("n_samples", LongType(), False), out_field]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_n, out_payload, keep_idx = [], [], [], []
-            for j, (cid, buf, c, sr) in enumerate(zip(ids, bufs, codec_vals, sr_vals)):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                mixed = augment_noise_np(pcm, zlib.crc32(cid.encode("utf-8")), snr_db)
-                wav = codecs.encode_wav(mixed, sr or _sr)
-                out_id.append(cid)
-                out_n.append(mixed.shape[0])
-                out_payload.append(hashlib.md5(wav).hexdigest() if digest else wav)
-                keep_idx.append(j)
-            take = pa.array(keep_idx, type=pa.int32())
-            arrays = [pa.array(out_id, type=pa.string())]
-            arrays += [batch.column(names.index(c)).take(take) for c in passthrough]
-            arrays.append(pa.array(out_n, type=pa.int64()))
-            arrays.append(
-                pa.array(out_payload, type=pa.string() if digest else pa.binary())
-            )
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1118,71 +918,25 @@ def with_speed_perturb(
     yields no rows (filter_invalid semantics). ``digest=True`` emits
     ``sp_md5`` (Catalyst-identical lowercase-hex md5) instead of the
     bytes — see with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    out_field = (
-        StructField("sp_md5", StringType(), False)
-        if digest
-        else StructField("sp", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField("speed", DoubleType(), False),
-            StructField("n_samples", LongType(), False),
-            out_field,
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
     speeds = tuple(float(s) for s in speeds)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
+    def per_clip(c):
+        return [(s, *_wav_row(speed_perturb_np(c.pcm, c.sr, s), c.sr, digest)) for s in speeds]
 
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_sp, out_n, out_bytes = [], [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no rows
-                    continue
-                rate = sr or _sr
-                for s in speeds:
-                    y = speed_perturb_np(pcm, rate, s)
-                    wav = codecs.encode_wav(y, rate)
-                    out_id.append(cid)
-                    out_sp.append(s)
-                    out_n.append(y.shape[0])
-                    out_bytes.append(hashlib.md5(wav).hexdigest() if digest else wav)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.string()),
-                    pa.array(out_sp, type=pa.float64()),
-                    pa.array(out_n, type=pa.int64()),
-                    pa.array(out_bytes, type=pa.string() if digest else pa.binary()),
-                ],
-                names=out_names,
-            )
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_kernel(
+        df,
+        per_clip,
+        [
+            StructField("speed", DoubleType(), False),
+            StructField("n_samples", LongType(), False),
+            _payload_field("sp", digest, False),
+        ],
+        keep=[StructField(id_col, StringType(), False)],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+        on_fail=[],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1211,8 +965,6 @@ def specaugment_means_np(pcm, sr_hz: int, key: int, f_max: int = 4, t_max: int =
     Returns (f0, f_w, t0, t_w, n_frames, means[MEL_N]) or None if the
     clip yields no full frame.
     """
-    import numpy as np
-
     logE = logmel_frames_np(pcm, sr_hz)
     if logE is None:
         return None
@@ -1243,75 +995,31 @@ def with_specaugment(
     post-mask means in ONE mapInArrow pass. Output: (clip_id, f0, f_w,
     t0, t_w, n_frames, sa_mel array<double> round-6); undecodable or
     sub-frame clips yield no row (filter_invalid semantics)."""
-    import zlib
-    from collections.abc import Iterator
+    def per_clip(c):
+        res = specaugment_means_np(c.pcm, c.sr, _clip_key(c))
+        if res is None:
+            return []
+        *head, mean = res
+        return [(*head, [float(v) for v in np.round(mean, 6)])]
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    out_schema = StructType(
+    return clip_kernel(
+        df,
+        per_clip,
         [
-            StructField(id_col, StringType(), False),
             StructField("f0", IntegerType(), False),
             StructField("f_w", IntegerType(), False),
             StructField("t0", IntegerType(), False),
             StructField("t_w", IntegerType(), False),
             StructField("n_frames", IntegerType(), False),
             StructField("sa_mel", ArrayType(DoubleType()), False),
-        ]
+        ],
+        keep=[StructField(id_col, StringType(), False)],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+        key_col=id_col,
+        on_fail=[],
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            o_id, o_f0, o_fw, o_t0, o_tw, o_n, o_mel = [], [], [], [], [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                res = specaugment_means_np(
-                    pcm, sr or _sr, zlib.crc32(cid.encode("utf-8"))
-                )
-                if res is None:
-                    continue
-                f0, f_w, t0, t_w, n_frames, mean = res
-                o_id.append(cid)
-                o_f0.append(f0), o_fw.append(f_w)
-                o_t0.append(t0), o_tw.append(t_w)
-                o_n.append(n_frames)
-                o_mel.append([float(v) for v in np.round(mean, 6)])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(o_id, type=pa.string()),
-                    pa.array(o_f0, type=pa.int32()),
-                    pa.array(o_fw, type=pa.int32()),
-                    pa.array(o_t0, type=pa.int32()),
-                    pa.array(o_tw, type=pa.int32()),
-                    pa.array(o_n, type=pa.int32()),
-                    pa.array(o_mel, type=pa.list_(pa.float64())),
-                ],
-                names=[id_col, "f0", "f_w", "t0", "t_w", "n_frames", "sa_mel"],
-            )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1330,10 +1038,6 @@ def normalize_loudness_np(pcm, target_rms: float = 0.1, peak_cap: float = 0.999)
     contract), peak = max(|x|) (order-free), gain = min(target/rms,
     peak_cap/peak), out = x * gain elementwise.
     """
-    import math
-
-    import numpy as np
-
     x = np.asarray(pcm, dtype=np.float64)
     if x.size == 0:
         return x
@@ -1362,64 +1066,16 @@ def with_normalized_loudness(
     the normalized wav bytes; decode failure yields no row.
     ``digest=True`` emits ``norm_md5`` instead of the bytes — see
     with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return clip_kernel(
+        df,
+        lambda c: [_wav_row(normalize_loudness_np(c.pcm, target_rms), c.sr, digest)],
+        [StructField("n_samples", LongType(), False), _payload_field("norm", digest, False)],
+        keep=[StructField(id_col, StringType(), False)],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+        on_fail=[],
     )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    out_field = (
-        StructField("norm_md5", StringType(), False)
-        if digest
-        else StructField("norm", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField("n_samples", LongType(), False),
-            out_field,
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_n, out_bytes = [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                y = normalize_loudness_np(pcm, target_rms)
-                wav = codecs.encode_wav(y, sr or _sr)
-                out_id.append(cid)
-                out_n.append(y.shape[0])
-                out_bytes.append(hashlib.md5(wav).hexdigest() if digest else wav)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.string()),
-                    pa.array(out_n, type=pa.int64()),
-                    pa.array(out_bytes, type=pa.string() if digest else pa.binary()),
-                ],
-                names=out_names,
-            )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1438,8 +1094,6 @@ def synth_rir_np(sr_hz: int, key: int, dur_s: float = 0.2, rt60_s: float = 0.15)
     ``env = exp(-6.9078 * t / rt60_s)`` (ln(1000) decay to -60 dB at
     rt60), ``ir = noise * env`` with ``ir[0] = 1.0`` (unit direct path).
     All elementwise — order-free."""
-    import numpy as np
-
     m = round(sr_hz * dur_s)
     noise = np.random.default_rng([RIR_SEED, int(key)]).standard_normal(m)
     t = np.arange(m, dtype=np.float64) / float(sr_hz)
@@ -1462,8 +1116,6 @@ def augment_reverb_np(pcm, sr_hz: int, key: int):
       maxima), ``out = y * g`` — reverb never raises the peak.
     Silent/empty clips pass through unchanged.
     """
-    import numpy as np
-
     x = np.asarray(pcm, dtype=np.float64)
     n = x.size
     if n == 0:
@@ -1495,66 +1147,17 @@ def with_reverb(
     decode failure yields no row. Deterministic under task retries.
     ``digest=True`` emits ``rev_md5`` instead of the bytes — see
     with_augmented_noise."""
-    import hashlib
-    import zlib
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return clip_kernel(
+        df,
+        lambda c: [_wav_row(augment_reverb_np(c.pcm, c.sr, _clip_key(c)), c.sr, digest)],
+        [StructField("n_samples", LongType(), False), _payload_field("rev", digest, False)],
+        keep=[StructField(id_col, StringType(), False)],
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        sr_col=sr_col,
+        key_col=id_col,
+        on_fail=[],
     )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    out_field = (
-        StructField("rev_md5", StringType(), False)
-        if digest
-        else StructField("rev", BinaryType(), False)
-    )
-    out_schema = StructType(
-        [
-            StructField(id_col, StringType(), False),
-            StructField("n_samples", LongType(), False),
-            out_field,
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            ids = batch.column(names.index(id_col)).to_pylist()
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            sr_vals = batch.column(names.index(sr_col)).to_pylist()
-            out_id, out_n, out_bytes = [], [], []
-            for cid, buf, c, sr in zip(ids, bufs, codec_vals, sr_vals):
-                try:
-                    pcm, _sr = codecs.decode(buf, c)
-                except Exception:  # noqa: BLE001 - decode failure => no row
-                    continue
-                rate = sr or _sr
-                y = augment_reverb_np(pcm, rate, zlib.crc32(cid.encode("utf-8")))
-                wav = codecs.encode_wav(y, rate)
-                out_id.append(cid)
-                out_n.append(y.shape[0])
-                out_bytes.append(hashlib.md5(wav).hexdigest() if digest else wav)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, type=pa.string()),
-                    pa.array(out_n, type=pa.int64()),
-                    pa.array(out_bytes, type=pa.string() if digest else pa.binary()),
-                ],
-                names=out_names,
-            )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def with_flac_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
@@ -1567,66 +1170,19 @@ def with_flac_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
     The bitstream walk lives in dataflow_geobeam_spark/flac — from-spec
     Rice/LPC/CRC decode, no libsndfile. ``digest=True`` appends
     ``pcm16_md5`` instead of the bytes — see with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_field = (
-        StructField("pcm16_md5", StringType())
-        if digest
-        else StructField("pcm16", BinaryType())
-    )
-    out_schema = StructType(
-        keep
-        + [
+    return clip_kernel(
+        df,
+        lambda c: [_pcm16_row(c, digest)],
+        [
             StructField("flac_sr", IntegerType()),
             StructField("n_samples", IntegerType()),
-            out_field,
-        ]
+            _payload_field("pcm16", digest),
+        ],
+        bytes_col=bytes_col,
+        codec_col=None,
+        decoder="flac",
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            srs, ns, outs = [], [], []
-            for buf in bufs:
-                try:
-                    pcm, sr = codecs.decode(bytes(buf), "flac")
-                except Exception:  # noqa: BLE001 - decode failure => invalid row
-                    srs.append(None)
-                    ns.append(None)
-                    outs.append(None)
-                    continue
-                q = np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2")
-                raw = q.tobytes()
-                srs.append(int(sr))
-                ns.append(int(q.shape[0]))
-                outs.append(hashlib.md5(raw).hexdigest() if digest else raw)
-            arrays = [batch.column(names.index(nm)) for nm in keep_names]
-            arrays.append(pa.array(srs, type=pa.int32()))
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(outs, type=pa.string() if digest else pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def with_sniffed_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
@@ -1639,67 +1195,17 @@ def with_sniffed_pcm16(df, bytes_col: str = "bytes", digest: bool = False):
     unknown magic / truncated payloads => NULL columns (F1 semantics).
     ``digest=True`` appends ``pcm16_md5`` instead of the bytes — see
     with_augmented_noise."""
-    import hashlib
-    from collections.abc import Iterator
 
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    keep = [f for f in df.schema.fields if f.name != bytes_col]
-    out_field = (
-        StructField("pcm16_md5", StringType())
-        if digest
-        else StructField("pcm16", BinaryType())
-    )
-    out_schema = StructType(
-        keep
-        + [
+    return clip_kernel(
+        df,
+        lambda c: [(c.container, *_pcm16_row(c, digest))],
+        [
             StructField("container", StringType()),
             StructField("sniff_sr", IntegerType()),
             StructField("n_samples", IntegerType()),
-            out_field,
-        ]
+            _payload_field("pcm16", digest),
+        ],
+        bytes_col=bytes_col,
+        codec_col=None,
+        decoder="sniff",
     )
-    keep_names = [f.name for f in keep]
-    out_names = [f.name for f in out_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            conts, srs, ns, outs = [], [], [], []
-            for buf in bufs:
-                try:
-                    pcm, sr, cont = codecs.decode_sniffed(bytes(buf))
-                except Exception:  # noqa: BLE001 - unknown/corrupt => invalid row
-                    conts.append(None)
-                    srs.append(None)
-                    ns.append(None)
-                    outs.append(None)
-                    continue
-                q = np.round(np.clip(pcm, -1.0, 1.0) * 32767.0).astype("<i2")
-                raw = q.tobytes()
-                conts.append(cont)
-                srs.append(int(sr))
-                ns.append(int(q.shape[0]))
-                outs.append(hashlib.md5(raw).hexdigest() if digest else raw)
-            arrays = [batch.column(names.index(nm)) for nm in keep_names]
-            arrays.append(pa.array(conts, type=pa.string()))
-            arrays.append(pa.array(srs, type=pa.int32()))
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(outs, type=pa.string() if digest else pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, out_schema)

@@ -1,4 +1,4 @@
-"""Vectorized codec->PCM decode (Arrow-batched, no per-row Python shipping).
+"""Vectorized codec->PCM decode and the one per-clip kernel runner.
 
 Graft analog of the reference's per-element reprojection+repair stage
 (``/root/reference/geobeam/fn.py:23-53`` ``make_valid``;
@@ -9,27 +9,33 @@ call handles an entire Arrow batch of clips.
 Implementation note (measured on this harness): for ~50 KB binary payloads,
 ``mapInArrow`` moves data JVM->Python ~5x faster than the pandas-UDF path,
 because Arrow binary stays a zero-copy buffer instead of being re-boxed as
-Python ``bytes`` inside a pandas Series twice. The decode hot path therefore
-uses ``mapInArrow``; a pandas-UDF variant is kept for expression-position use.
+Python ``bytes`` inside a pandas Series twice. Every decode-per-clip kernel
+in the engine therefore runs through ``clip_kernel``, the single
+``mapInArrow`` call site for decoded audio. Its contract:
 
-Two decode paths, mirroring the reference's speed-vs-detail source pair
-(RasterBlockSource "optimizes for pipeline speed" vs RasterPolygonSource
-"slower ... more rows", ``geobeam/io.py:35-37``, ``io.py:162-165``):
-
-* ``with_decoded_metrics`` — FAST path: decodes and immediately reduces to
-  scalar metrics (n_samples, rms, peak); PCM never enters the Spark plan, so
-  windowed aggregates shuffle ~50 bytes/row instead of ~50 KB.
-* ``with_decoded_pcm`` — DETAIL path: materializes ``pcm array<float>`` for
-  per-sample work (frame explode, SNR checks, feature extraction).
-
-Failure semantics: malformed payload or unknown codec => ``decode_ok=false``
-(nulled metrics) instead of a task failure — the analog of ``make_valid``
-returning ``None`` + ``filter_invalid`` dropping it (``geobeam/fn.py:56-88``).
+* **Kept columns.** Output rows are ``take(row_idx)`` of the kept input
+  columns followed by one column per out field. 1:1 kernels keep every
+  input column but the payload; row-producing kernels keep
+  ``(id, *passthrough)``. ``per_clip`` returns 0..N output tuples per clip,
+  so row explosion and passthrough need no extra code.
+* **Decode failure** (null payload, malformed payload, unknown codec) gives
+  one of three results, chosen by the wrapper: a row of NULL outputs, a
+  fixed failure row (``with_decoded_metrics``: ``decode_ok=false`` with
+  zeroed metrics), or no row — the analog of ``make_valid`` returning
+  ``None`` + ``filter_invalid`` dropping it (``geobeam/fn.py:56-88``). Only
+  the decode is guarded: a kernel that raises on a decoded clip fails the
+  task instead of hiding a bug as a null.
+* **Decoders.** ``"codec"`` decodes under the row's codec label and prefers
+  the declared sample rate over the decoded one; ``"flac"`` decodes every
+  payload as FLAC; ``"sniff"`` picks the container from magic bytes.
+  ``"flac"`` and ``"sniff"`` report the decoded rate.
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -37,16 +43,21 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     FloatType,
     IntegerType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
+
+from dataflow_geobeam_spark import codecs
 
 METRIC_FIELDS = [
     StructField("decode_ok", BooleanType()),
@@ -56,45 +67,58 @@ METRIC_FIELDS = [
     StructField("peak", DoubleType()),
 ]
 DECODE_METRICS_TYPE = StructType(METRIC_FIELDS)
+_METRICS_FAILED = (False, 0, 0, 0.0, 0.0)
 
-_METRIC_ARROW = {
-    "decode_ok": pa.bool_(),
-    "sr_decoded": pa.int32(),
-    "n_samples": pa.int64(),
-    "rms": pa.float64(),
-    "peak": pa.float64(),
+
+def _arrow_type(dt):
+    """Arrow type of a Spark output field; lists keep pyarrow's default
+    ``item`` child (``to_arrow_type`` would name it ``element``)."""
+    if isinstance(dt, ArrayType):
+        return pa.list_(_arrow_type(dt.elementType))
+    return to_arrow_type(dt)
+
+
+class Clip(NamedTuple):
+    """One decoded clip as a ``per_clip`` kernel sees it."""
+
+    pcm: np.ndarray  # float32 mono PCM in [-1, 1]
+    sr: int  # declared rate if the row has one, else the decoded rate
+    key: object  # value of the runner's ``key_col`` (None if unset)
+    container: str  # codec label, or the sniffed container
+
+
+# decoder(buf, codec) -> (pcm, decoded sr, container); the only call sites
+# of codecs.decode / codecs.decode_sniffed in the per-clip kernels
+_DECODERS = {
+    "codec": lambda buf, codec: (*codecs.decode(buf, codec), codec),
+    "flac": lambda buf, codec: (*codecs.decode(bytes(buf), "flac"), "flac"),
+    "sniff": lambda buf, codec: codecs.decode_sniffed(bytes(buf)),
 }
 
 
-def _decode_batch_metrics(bufs, codec_values):
-    """Shared per-batch decode kernel -> dict of numpy metric arrays.
+def _clip_rows(decode, per_clip, failed, buf, codec, sr, key) -> list:
+    """Output tuples of one clip: ``per_clip``'s on success, ``failed``
+    when the decode raises."""
+    try:
+        pcm, sr_decoded, container = decode(buf, codec)
+    except Exception:  # noqa: BLE001 - any decode failure => wrapper's failure rows
+        return failed
+    return per_clip(Clip(pcm, sr or sr_decoded, key, container))
 
-    Heavy imports stay worker-side (lazy-import precedent,
-    ``geobeam/io.py:68-70``). Metrics (n, rms, peak in float64) are
-    computed inline — round-3 removed the shared ``audio_synth.pcm_metrics``
-    kernel so the fixture oracle (``fixtures.independent.metrics``) is a
-    genuinely independent implementation of the same formula."""
-    from dataflow_geobeam_spark import codecs
 
-    n = len(bufs)
-    ok = np.zeros(n, dtype=bool)
-    sr = np.zeros(n, dtype=np.int32)
-    ns = np.zeros(n, dtype=np.int64)
-    rms = np.zeros(n, dtype=np.float64)
-    peak = np.zeros(n, dtype=np.float64)
-    for idx in range(n):
-        try:
-            pcm, sr_hz = codecs.decode(bufs[idx], codec_values[idx])
-            ns[idx] = pcm.shape[0]
-            if ns[idx]:
-                x = pcm.astype(np.float64)
-                rms[idx] = np.sqrt(np.mean(x * x))
-                peak[idx] = np.max(np.abs(x))
-            sr[idx] = sr_hz
-            ok[idx] = True
-        except Exception:  # noqa: BLE001 - any decode failure => invalid row
-            ok[idx] = False
-    return {"decode_ok": ok, "sr_decoded": sr, "n_samples": ns, "rms": rms, "peak": peak}
+def _payload(raw: bytes, digest: bool):
+    """``raw``, or its lowercase-hex md5 (what Catalyst's ``md5()`` gives)
+    when ``digest`` — callers that only hash a kernel's output bytes stop
+    shipping them back across Arrow."""
+    return hashlib.md5(raw).hexdigest() if digest else raw
+
+
+def _payload_field(name: str, digest: bool, nullable: bool = True) -> StructField:
+    """Schema field matching ``_payload``: ``<name>_md5`` string or ``<name>``
+    binary."""
+    if digest:
+        return StructField(f"{name}_md5", StringType(), nullable)
+    return StructField(name, BinaryType(), nullable)
 
 
 def _binary_views(col: pa.Array) -> list:
@@ -126,84 +150,131 @@ def _binary_views(col: pa.Array) -> list:
     return out
 
 
+def clip_kernel(
+    df: DataFrame,
+    per_clip,
+    out_fields: list[StructField],
+    *,
+    keep: list[StructField] | None = None,
+    bytes_col: str = "bytes",
+    codec_col: str | None = "codec",
+    sr_col: str | None = None,
+    key_col: str | None = None,
+    decoder: str = "codec",
+    on_fail: list[tuple] | None = None,
+) -> DataFrame:
+    """Decode every clip of ``df`` and apply ``per_clip`` in ONE mapInArrow
+    pass (contract in the module docstring).
+
+    * ``per_clip(clip: Clip) -> list[tuple]`` — one tuple per output row,
+      values in ``out_fields`` order.
+    * ``keep`` — input columns copied onto each output row (default: all
+      but ``bytes_col``); a field's declared type and nullability go into
+      the output schema as given.
+    * ``sr_col`` / ``key_col`` — columns read into ``Clip.sr`` (declared
+      rate, falls back to the decoded one when null or 0) and ``Clip.key``.
+    * ``decoder`` — ``"codec"`` (reads ``codec_col``), ``"flac"`` or
+      ``"sniff"``.
+    * ``on_fail`` — rows emitted for a clip that fails to decode (default:
+      one row of NULL outputs; ``[]`` drops the clip).
+    """
+    if keep is None:
+        keep = [f for f in df.schema.fields if f.name != bytes_col]
+    keep_names = [f.name for f in keep]
+    out_schema = StructType(list(keep) + list(out_fields))
+    names = [f.name for f in out_schema.fields]
+    out_types = [_arrow_type(f.dataType) for f in out_fields]
+    decode = _DECODERS[decoder]
+    failed = [(None,) * len(out_fields)] if on_fail is None else list(on_fail)
+
+    def values(batch: pa.RecordBatch, col: str | None) -> list:
+        return batch.column(col).to_pylist() if col else [None] * batch.num_rows
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            bufs = _binary_views(batch.column(bytes_col))
+            args = zip(bufs, *(values(batch, c) for c in (codec_col, sr_col, key_col)))
+            rows, row_idx = [], []
+            for j, (buf, codec, sr, key) in enumerate(args):
+                out = _clip_rows(decode, per_clip, failed, buf, codec, sr, key)
+                rows.extend(out)
+                row_idx.extend([j] * len(out))
+            kept = [batch.column(c) for c in keep_names]
+            if row_idx != list(range(batch.num_rows)):
+                take = pa.array(row_idx, type=pa.int32())
+                kept = [col.take(take) for col in kept]
+            cols = zip(*rows) if rows else [()] * len(out_types)
+            arrays = kept + [pa.array(v, type=t) for v, t in zip(cols, out_types)]
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return df.mapInArrow(run, out_schema)
+
+
+def clip_metrics(clip: Clip) -> list[tuple]:
+    """(decode_ok, sr_decoded, n_samples, rms, peak) of one decoded clip.
+
+    Metrics (n, rms, peak in float64) are computed inline — round-3
+    removed the shared ``audio_synth.pcm_metrics`` kernel so the fixture
+    oracle (``fixtures.independent.metrics``) is a genuinely independent
+    implementation of the same formula."""
+    pcm = clip.pcm
+    n = pcm.shape[0]
+    rms = peak = 0.0
+    if n:
+        x = pcm.astype(np.float64)
+        rms = float(np.sqrt(np.mean(x * x)))
+        peak = float(np.max(np.abs(x)))
+    return [(True, int(clip.sr), n, rms, peak)]
+
+
 def with_decoded_metrics(
     df: DataFrame, bytes_col: str = "bytes", codec_col: str = "codec", drop_bytes: bool = True
 ) -> DataFrame:
-    """Append decode_ok/sr_decoded/n_samples/rms/peak via mapInArrow.
+    """Append decode_ok/sr_decoded/n_samples/rms/peak via mapInArrow (fast
+    path: PCM never enters the Spark plan, so windowed aggregates shuffle
+    ~50 bytes/row instead of ~50 KB).
 
     ``drop_bytes=True`` prunes the binary payload in the same pass, so
     downstream shuffles move metrics, not megabytes (column-pruning analog
     of the reference's band-subset reads, ``geobeam/io.py:129-132``).
+    A clip that fails to decode gets ``decode_ok=false`` and zeros.
     """
-    in_schema = df.schema
-    keep = [f for f in in_schema.fields if not (drop_bytes and f.name == bytes_col)]
-    out_schema = StructType(keep + METRIC_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            metrics = _decode_batch_metrics(bufs, codec_vals)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays += [pa.array(v, type=_METRIC_ARROW[k]) for k, v in metrics.items()]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + list(metrics))
-
-    return df.mapInArrow(fn, out_schema)
+    return clip_kernel(
+        df,
+        clip_metrics,
+        METRIC_FIELDS,
+        keep=None if drop_bytes else df.schema.fields,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+        on_fail=[_METRICS_FAILED],
+    )
 
 
 def with_decoded_pcm(
     df: DataFrame, bytes_col: str = "bytes", codec_col: str = "codec", drop_bytes: bool = True
 ) -> DataFrame:
-    """Append ``pcm array<float>`` (detail path) via mapInArrow."""
-    in_schema = df.schema
-    keep = [f for f in in_schema.fields if not (drop_bytes and f.name == bytes_col)]
-    out_schema = StructType(keep + [StructField("pcm", ArrayType(FloatType()))])
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from dataflow_geobeam_spark import codecs
-
-        for batch in batches:
-            names = batch.schema.names
-            bufs = _binary_views(batch.column(names.index(bytes_col)))
-            codec_vals = batch.column(names.index(codec_col)).to_pylist()
-            pcms = []
-            for buf, c in zip(bufs, codec_vals):
-                try:
-                    pcm, _ = codecs.decode(buf, c)
-                    pcms.append(pcm)
-                except Exception:  # noqa: BLE001
-                    pcms.append(None)
-            arrays = [batch.column(names.index(n)) for n in keep_names]
-            arrays.append(pa.array(pcms, type=pa.list_(pa.float32())))
-            yield pa.RecordBatch.from_arrays(arrays, names=keep_names + ["pcm"])
-
-    return df.mapInArrow(fn, out_schema)
+    """Append ``pcm array<float>`` (detail path: per-sample work such as
+    frame explode, SNR checks, feature extraction) via mapInArrow; NULL
+    when the clip fails to decode."""
+    return clip_kernel(
+        df,
+        lambda c: [(c.pcm,)],
+        [StructField("pcm", ArrayType(FloatType()))],
+        keep=None if drop_bytes else df.schema.fields,
+        bytes_col=bytes_col,
+        codec_col=codec_col,
+    )
 
 
 @pandas_udf(DECODE_METRICS_TYPE)
 def decode_metrics_struct(data: pd.Series, codec: pd.Series) -> pd.DataFrame:
     """Expression-position variant (pandas UDF). Slower than the mapInArrow
     path for large payloads; kept for composability inside select()."""
-    metrics = _decode_batch_metrics(list(data.values), list(codec.values))
-    return pd.DataFrame(metrics)
-
-
-@pandas_udf(ArrayType(FloatType()))
-def decode_pcm_array(data: pd.Series, codec: pd.Series) -> pd.Series:
-    """Expression-position PCM decode; malformed rows -> null."""
-    from dataflow_geobeam_spark import codecs
-
-    out = []
-    for buf, c in zip(data.values, codec.values):
-        try:
-            pcm, _ = codecs.decode(buf, c)
-            out.append(pcm)
-        except Exception:  # noqa: BLE001
-            out.append(None)
-    return pd.Series(out)
+    rows = [
+        _clip_rows(_DECODERS["codec"], clip_metrics, [_METRICS_FAILED], buf, c, None, None)[0]
+        for buf, c in zip(data.values, codec.values)
+    ]
+    return pd.DataFrame(rows, columns=DECODE_METRICS_TYPE.names)
 
 
 def expected_samples(sr_col: Column, dur_col: Column) -> Column:
