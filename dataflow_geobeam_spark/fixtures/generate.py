@@ -1556,7 +1556,10 @@ def ensure_fp_queries(sf_dir: str, root: str = DEFAULT_FIXTURES_ROOT) -> str:
     os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, "fp_queries.parquet")
     if os.path.exists(path):
-        return path
+        meta = pq.ParquetFile(path).metadata
+        # a file cached before the 256-row-group writer below is rebuilt
+        if not (meta.num_row_groups == 1 and meta.num_rows > 256):
+            return path
     clips = pq.read_table(
         os.path.join(ensure_fixtures(sf_dir, root), "clips.parquet"),
         columns=["clip_id", "bytes", "codec", "sr_hz", "ts"],

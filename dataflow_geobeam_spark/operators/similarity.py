@@ -295,17 +295,18 @@ def _prefilter_pairs(
     row-wise dot. Pairs whose approximate cosine is non-finite (zero
     vectors => NaN) or whose ids miss the map are KEPT — only a clear
     below-margin miss drops a row, so the exact verify downstream sees a
-    strict superset of its true output."""
+    strict superset of its true output. Null or wrong-length corpus
+    vectors are left out of the map, so their pairs go to the exact
+    verify unscreened."""
     import numpy as np
 
-    pdf = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).toPandas()
+    corpus = df.where(
+        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
+    )
+    pdf = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).toPandas()
     if len(pdf) == 0:
         return pairs  # empty corpus: nothing to screen against
     mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-    if mat.ndim != 2 or mat.shape[1] != dim:
-        raise ValueError(
-            f"prefilter: expected fixed dim={dim}, got matrix shape {mat.shape}"
-        )
     norms = np.sqrt((mat * mat).sum(axis=1))
     # fully vectorized id -> row lookup: sorted id array + searchsorted
     # (no per-value Python dict hits — the batch stream can be millions
@@ -472,6 +473,15 @@ def near_dup_pairs(
             df, collided, id_col, vec_col, dim, threshold - PREFILTER_MARGIN
         )
     cand = collided.dropDuplicates(["id_a", "id_b"])
+    return _exact_verify(df, cand, id_col, vec_col, threshold)
+
+
+def _exact_verify(
+    df: DataFrame, cand: DataFrame, id_col: str, vec_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, cosine) for the candidate pairs whose exact cosine
+    clears ``threshold``. A pair with a null vector, or with vectors of
+    different lengths, gets a NULL cosine and is dropped."""
     # Round-6 (guide §1.2 per-task work): the interpreted higher-order
     # cosine fold was the verify stage's whole cost — and 2 of its 3
     # folds (the norms) depend on ONE vector each, not the pair. Compute

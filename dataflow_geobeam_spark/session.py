@@ -26,8 +26,11 @@ session factory with scale-aware defaults:
   directory where the package is not importable would otherwise fail
   every Python task with ``ModuleNotFoundError``.
 * UTC session timezone so event-time windows hash identically across engines.
-* Shuffle partitions sized for the local harness; on a real cluster AQE
-  coalesces, so a higher static number is safe.
+* Shuffle partitions sized for the local harness. Batch shuffles rely on
+  AQE coalescing, so a higher static number is safe. Streaming queries run
+  without AQE, so the flagship stream's state
+  (``streaming.pipeline.run_streaming_window_agg``) uses one task wave
+  instead, a count fixed when its checkpoint is created.
 """
 
 from __future__ import annotations

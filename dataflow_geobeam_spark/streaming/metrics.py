@@ -6,7 +6,6 @@ claimed read unit (bytes, window, feature index — ``geobeam/io.py:84-93,
 
 * a ``StreamingQueryListener`` collecting per-epoch progress (rows/sec,
   batch duration, state size) — queryable after the run;
-* ``observe()`` named metrics evaluated inside the plan (no extra pass);
 * lineage columns written by the sink (``_epoch_id``, ``_source_partition``)
   so every committed row is traceable to its micro-batch and task.
 """
@@ -90,15 +89,6 @@ class EpochMetricsListener(StreamingQueryListener):
         with open(path, "w") as f:
             for p in self.progress:
                 f.write(json.dumps(p, default=str) + "\n")
-
-
-def with_observed_counts(df: DataFrame, name: str = "engine_metrics") -> DataFrame:
-    """Attach plan-evaluated counters (zero extra passes) to a streaming df."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("dur_ms").cast("long")).alias("sum_dur_ms"),
-    )
 
 
 def partition_stats(sink, spark) -> DataFrame:

@@ -154,6 +154,16 @@ def run_streaming_window_agg(
       for windows still open when the stream drains).
     * ``append``: only watermark-finalized windows are emitted — trailing
       windows stay in state at shutdown, the streaming-pure semantics.
+
+    State partitions: Spark turns AQE off inside streaming queries, so the
+    windowed state would keep the session's batch-sized
+    ``spark.sql.shuffle.partitions`` and every epoch would pay that many
+    state-store commits, tasks and sink files. A new checkpoint is instead
+    started with one task wave, ``defaultParallelism`` partitions. The
+    count is fixed when the checkpoint is created: Spark records it in the
+    offset log, and a resumed checkpoint keeps its recorded count. The
+    caller's session conf is unchanged after the call; another thread that
+    plans on the same session during the call sees the stream's count.
     """
     # stream_dir override: benchmarks pre-materialize the paced file set
     # elsewhere (e.g. tmpfs) to keep one-off IO out of the timed region
@@ -171,4 +181,12 @@ def run_streaming_window_agg(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime="2 seconds")
-    return writer.start(), sink
+    # the query clones the session inside start(), so the count is set on
+    # the caller's session only for that call
+    key = "spark.sql.shuffle.partitions"
+    caller_partitions = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return writer.start(), sink
+    finally:
+        spark.conf.set(key, caller_partitions)

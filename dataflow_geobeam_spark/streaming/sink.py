@@ -393,8 +393,8 @@ class ExactlyOnceParquetSink:
         correctness — the grace age only protects an IN-FLIGHT epoch whose
         manifest has not renamed in yet (Iceberg's
         ``remove_orphan_files(older_than)`` contract). Local-path sinks only:
-        mtime via os.stat; on a DFS use the engine's Iceberg drop-in, whose
-        native action does the same sweep.
+        mtime via os.stat; on a DFS use Iceberg's own ``remove_orphan_files``
+        action, which does the same sweep.
         """
         import time
 
@@ -433,42 +433,3 @@ class ExactlyOnceParquetSink:
         w = Window.partitionBy(*key_cols).orderBy(F.desc("_epoch_id"))
         return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
-
-class IcebergStreamingSink:
-    """Drop-in Iceberg sink: same surface as ExactlyOnceParquetSink.
-
-    When the iceberg-spark-runtime jar + catalog config are present,
-    Spark's native Iceberg streaming sink provides the identical guarantee
-    this module implements from scratch (queryId+epochId idempotent commit,
-    snapshot-isolated readers). The sandbox ships no Iceberg jar, so this
-    class import-gates at first use; the from-scratch parquet sink is the
-    tested stand-in (BASELINE.json names Iceberg; the commit protocol is
-    deliberately identical so swapping is a one-line change).
-    """
-
-    def __init__(self, table_name: str):
-        self.table_name = table_name
-
-    def _require_iceberg(self, spark: SparkSession) -> None:
-        try:
-            spark._jvm.org.apache.iceberg.Table  # noqa: B018 - probe only
-        except Exception as exc:  # pragma: no cover - no jar in sandbox
-            raise NotImplementedError(
-                "Iceberg runtime jar not on the classpath; use "
-                "ExactlyOnceParquetSink (identical commit protocol)"
-            ) from exc
-
-    def write_batch(self, df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch form — Iceberg commits are epoch-idempotent natively."""
-        self._require_iceberg(df.sparkSession)
-        df.writeTo(self.table_name).append()  # pragma: no cover
-
-    def foreach_batch(self):
-        def _fn(df: DataFrame, epoch_id: int) -> None:
-            self.write_batch(df, epoch_id)
-
-        return _fn
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        self._require_iceberg(spark)
-        return spark.read.table(self.table_name)  # pragma: no cover

@@ -4,11 +4,16 @@ Covers SURVEY.md §7 M3 (streaming core) and M6 (exactly-once + resume):
 * update-mode stream result == batch oracle (full row-set equality)
 * append-mode emits exactly the watermark-finalized windows (no dupes)
 * an epoch replayed after a mid-stream crash commits exactly once
+* a new checkpoint's state runs in one task wave; a resumed one keeps the
+  partition count it recorded
 """
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,3 +153,88 @@ def test_sink_epoch_idempotence(spark, tmp_path):
     sink.write_batch(df, 0)  # replay
     assert sink.committed_files() == files_before
     assert sink.read(spark).count() == 10
+
+
+# ---------------------------------------------------------------------------
+# state partition count: one task wave for a new checkpoint, the recorded
+# count for a resumed one
+# ---------------------------------------------------------------------------
+
+SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+
+
+def _offset_log_partitions(ckpt):
+    """The shuffle partition count each offsets/N entry recorded."""
+    log = os.path.join(ckpt, "offsets")
+    counts = []
+    for name in sorted(os.listdir(log)):
+        if name.isdigit():
+            with open(os.path.join(log, name)) as f:
+                meta = json.loads(f.read().splitlines()[1])
+            counts.append(meta["conf"][SHUFFLE_KEY])
+    return counts
+
+
+@pytest.fixture()
+def caller_partitions(spark):
+    """Restore the shared session's partition count after the test."""
+    before = spark.conf.get(SHUFFLE_KEY)
+    yield
+    spark.conf.set(SHUFFLE_KEY, before)
+
+
+def test_flagship_state_uses_one_task_wave(spark, fixture_dir, tmpdirs, caller_partitions):
+    out_dir, ckpt = tmpdirs
+    spark.conf.set(SHUFFLE_KEY, "32")
+    query, _ = pipeline.run_streaming_window_agg(
+        spark, fixture_dir, out_dir, ckpt, n_files=6, available_now=True
+    )
+    query.awaitTermination(300)
+    counts = _offset_log_partitions(ckpt)
+    assert len(counts) >= 3
+    assert set(counts) == {str(spark.sparkContext.defaultParallelism)}
+    assert spark.conf.get(SHUFFLE_KEY) == "32"
+
+
+def test_resumed_checkpoint_keeps_its_partition_count(
+    spark, fixture_dir, tmpdirs, tmp_path, caller_partitions
+):
+    out_dir, ckpt = tmpdirs
+    arrival = pipeline.prepare_stream_dir_arrival_order(fixture_dir, 4)
+    files = sorted(f for f in os.listdir(arrival) if f.endswith(".parquet"))
+    assert len(files) == 4
+    watch = tmp_path / "watch"
+    watch.mkdir()
+
+    def add(names, mtime):
+        for k, name in enumerate(names):
+            dst = watch / name
+            shutil.copy(os.path.join(arrival, name), dst)
+            os.utime(dst, (mtime + k, mtime + k))
+
+    t0 = time.time() - 100
+    add(files[:2], t0)
+    clips = pipeline.stream_clips_dir(spark, str(watch), 1)
+    agg = pipeline.windowed_agg_stream(pipeline.decoded_valid_stream(clips))
+    spark.conf.set(SHUFFLE_KEY, "3")
+    q = (
+        agg.writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(ExactlyOnceParquetSink(out_dir).foreach_batch())
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    first = _offset_log_partitions(ckpt)
+    assert len(first) >= 2 and set(first) == {"3"}
+
+    add(files[2:], t0 + 10)
+    query, sink = pipeline.run_streaming_window_agg(
+        spark, fixture_dir, out_dir, ckpt, stream_dir=str(watch), available_now=True
+    )
+    query.awaitTermination(300)
+    counts = _offset_log_partitions(ckpt)
+    assert len(counts) >= len(first) + 2 and set(counts) == {"3"}
+    got = sink.read_latest(spark, ["window_start", "bucket"]).collect()
+    want = _batch_oracle(spark, fixture_dir).collect()
+    assert _as_key_set(got) == _as_key_set(want)
