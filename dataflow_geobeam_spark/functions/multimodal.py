@@ -268,12 +268,6 @@ def with_image_embeddings(
     return in_df.mapInArrow(fn, out_schema)
 
 
-def sample_video_frames_stub(buf: bytes, n_frames: int) -> list[bytes]:
-    """Video frame sampling: requires a real decoder (ffmpeg/PyAV) — not in
-    this container. The deterministic stand-in below chunks the payload."""
-    raise NotImplementedError("video frame sampling requires ffmpeg/PyAV")
-
-
 def with_sampled_frames(
     df: DataFrame, bytes_col: str = "bytes", id_col: str = "clip_id", n_frames: int = 4
 ) -> DataFrame:

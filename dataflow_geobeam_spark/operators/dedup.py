@@ -444,13 +444,13 @@ def embedding_near_dups(
     n_tables: int = 32,
     corpus_n: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs via LSH bucket self-join.
+    """Embedding-cosine near-dup pairs scored inside LSH buckets.
 
     Round-2 rewrite: round 1 cross-joined a x b on nothing but id_a < id_b
     — a cartesian product (10^18 comparisons at 10^9 vectors). Now
     candidates come from sign-sketch (table, bucket) collisions (one
-    mapInArrow sketch pass, shuffle per bucket) and only candidates pay
-    the exact-cosine verification — same shape as minhash_lsh_pairs.
+    mapInArrow sketch pass, shuffle per bucket) and only pairs inside a
+    bucket pay the exact cosine.
     ``corpus_n`` / ``n_planes="auto"`` pass through to
     ``similarity.near_dup_pairs`` (round 5).
     """

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Three paths, per the judge's checklist:
+Four paths:
 
 * ``brute_force_topk`` — exact cosine top-k: broadcast the (small) query
   set against the corpus, rank with a window. Correctness baseline; cost
@@ -11,8 +11,13 @@ Three paths, per the judge's checklist:
   per-bucket, never all-pairs. Recall < 1.0 by construction — tests
   measure it against the brute-force baseline rather than asserting
   equality.
-* ``near_dup_pairs`` — the self-join form of the same bucketing, for
-  embedding near-duplicate detection (used by operators/dedup).
+* ``near_dup_pairs`` — all pairs inside each bucket of the same
+  bucketing, for embedding near-duplicate detection (used by
+  operators/dedup). The sketch carries each vector to its buckets; one
+  mapInArrow pass over the (table, bucket)-sorted sketch scores every
+  pair in a bucket with the sequential fold (``_fold_dot``), so the
+  cosines are bit-identical to ``cosine_expr``'s. The hot-bucket cap is
+  a plain int by then; no join, collect or broadcast.
 * ``ivf_topk`` — inverted-file probing: corpus assigned to Voronoi cells
   of seeded centroids (one matmul pass), queries probe their n_probe
   nearest cells, exact cosine re-ranks within probed cells.
@@ -41,7 +46,8 @@ from pyspark.sql.window import Window
 
 def cosine_expr(a: Column, b: Column) -> Column:
     """Cosine similarity between two float arrays — pure Catalyst
-    (zip_with + aggregate), computed in double."""
+    (zip_with + aggregate), computed in double. NULL when either vector
+    has zero norm, whatever ``spark.sql.ansi.enabled`` says."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -49,7 +55,22 @@ def cosine_expr(a: Column, b: Column) -> Column:
     )
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v))
-    return dot / (na * nb)
+    return F.try_divide(dot, na * nb)
+
+
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``sum_k a[k] * b[k]`` over the FIRST axis of two float64 arrays
+    (the rest broadcasts), folded left to right from 0.0 — the order of
+    ``cosine_expr``'s ``aggregate`` fold, so dots and norms are
+    bit-identical to Catalyst's. Never matmul, einsum or a pairwise-summed
+    reduce (their accumulation order differs), and never ``np.cumsum``
+    along a row (its per-row accumulate costs ~100x this column loop)."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    prod = np.empty_like(acc)
+    for k in range(a.shape[0]):
+        np.multiply(a[k], b[k], out=prod)
+        acc += prod
+    return acc
 
 
 def brute_force_topk(
@@ -90,23 +111,19 @@ def _all_planes(dim: int, n_planes: int, n_tables: int, seed: int) -> np.ndarray
 
 
 def recommended_n_planes(n_rows: int) -> int:
-    """Plane count for a near-dup SELF-join over ``n_rows`` vectors:
+    """Plane count for near-dup pairs over ``n_rows`` vectors:
     ``ceil(log2 N) + 1``.
 
     Bucket occupancy is ~N/2^n_planes and candidate volume is
-    ~N * n_tables * occupancy / 2, so a FIXED plane count makes the
-    self-join quadratic in N; log-scaled planes hold occupancy ~0.5 and
-    candidates ~4N at any corpus size. The formula recommends 17 planes at
-    50k vectors (ceil(log2 50000) + 1 = 17). Measured
-    (BENCH/BASELINE.md, multimodal section): at 50k vectors, 12 planes ->
-    4.4M candidates and a verify-dominated 2-minute join; 16 planes (the
-    benchmarked configuration, one under the formula's 17) -> ~300k
-    candidates, 12x faster, identical output. Recall per near-identical
-    pair stays ~1
-    (per-plane agreement ~0.99 at cosine 0.999; raise n_tables if the
-    target threshold is lower). The golden-gated driver queries pin their
-    own fixed plane counts for reproducibility; production callers should
-    size with this."""
+    ~N * n_tables * occupancy / 2, so a FIXED plane count makes the pair
+    count quadratic in N; log-scaled planes hold occupancy ~0.5 and
+    candidates ~4N at any corpus size. Measured (BENCH/BASELINE.md,
+    multimodal section): at 50k vectors, 12 planes -> 4.4M candidates;
+    16 planes -> ~300k candidates, 12x faster, identical output. Recall
+    per near-identical pair stays ~1 (per-plane agreement ~0.99 at cosine
+    0.999; raise n_tables if the target threshold is lower). The
+    golden-gated driver queries pin their own fixed plane counts for
+    reproducibility; production callers should size with this."""
     import math
 
     return max(12, math.ceil(math.log2(max(2, n_rows))) + 1)
@@ -132,21 +149,36 @@ def sketch_buckets(
     Requires fixed-length, non-null vectors of exactly ``dim`` floats
     (violations raise in the worker with row context).
     """
+    return _sketch(df, id_col, vec_col, dim, n_planes, n_tables, seed, False)
+
+
+def _sketch(
+    df: DataFrame, id_col: str, vec_col: str, dim: int,
+    n_planes: int, n_tables: int, seed: int, with_vectors: bool,
+) -> DataFrame:
+    """``sketch_buckets``; with ``with_vectors`` each row also carries its
+    vector packed as ``_vec`` binary (float32 values for array<float>,
+    else float64; read back by ``_unpack``) — a byte copy across the Arrow
+    boundary, where an ``array<float>`` column converts element by
+    element."""
     planes = _all_planes(dim, n_planes, n_tables, seed)  # closure-shipped
     weights = (1 << np.arange(n_planes, dtype=np.int64))
     nt, np_ = n_tables, n_planes
     id_field = df.schema[id_col].dataType
+    elem = df.schema[vec_col].dataType.elementType
+    packed_dtype = np.float32 if isinstance(elem, sqltypes.FloatType) else np.float64
 
     in_df = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    out_schema = sqltypes.StructType(
-        [
-            sqltypes.StructField("_id", id_field, False),
-            sqltypes.StructField("table", sqltypes.IntegerType(), False),
-            sqltypes.StructField("bucket", sqltypes.LongType(), False),
-        ]
-    )
+    fields = [
+        sqltypes.StructField("_id", id_field, False),
+        sqltypes.StructField("table", sqltypes.IntegerType(), False),
+        sqltypes.StructField("bucket", sqltypes.LongType(), False),
+    ]
+    if with_vectors:
+        fields.append(sqltypes.StructField("_vec", sqltypes.BinaryType(), False))
+    names = [f.name for f in fields]
 
-    def _sketch(batches):
+    def _sketch_batches(batches):
         import pyarrow as pa
 
         for batch in batches:
@@ -164,17 +196,41 @@ def sketch_buckets(
             v = flat.reshape(n, dim).astype(np.float64, copy=False)
             bits = (v @ planes.T) > 0  # (n, nt*np_)
             buckets = bits.reshape(n, nt, np_).astype(np.int64) @ weights  # (n, nt)
-            # table-major layout: [all ids @ table 0, all ids @ table 1, ...]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.concat_arrays([ids] * nt),
-                    pa.array(np.repeat(np.arange(nt, dtype=np.int32), n)),
-                    pa.array(buckets.T.reshape(-1)),
-                ],
-                names=["_id", "table", "bucket"],
+            if not with_vectors:
+                # table-major layout: [all ids @ table 0, all ids @ table 1, ...]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.concat_arrays([ids] * nt),
+                        pa.array(np.repeat(np.arange(nt, dtype=np.int32), n)),
+                        pa.array(buckets.T.reshape(-1)),
+                    ],
+                    names=names,
+                )
+                continue
+            raw = flat.astype(packed_dtype, copy=False)
+            width = dim * raw.itemsize
+            offsets = np.arange(0, (n + 1) * width, width, dtype=np.int32)
+            packed = pa.Array.from_buffers(
+                pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(raw)]
             )
+            for t in range(nt):  # one batch per table: batches stay input-sized
+                table = pa.array(np.full(n, t, dtype=np.int32))
+                yield pa.RecordBatch.from_arrays(
+                    [ids, table, pa.array(buckets[:, t]), packed], names=names
+                )
 
-    return in_df.mapInArrow(_sketch, schema=out_schema)
+    return in_df.mapInArrow(_sketch_batches, schema=sqltypes.StructType(fields))
+
+
+def _unpack(col, dim: int) -> np.ndarray:
+    """(rows, dim) float64 matrix from a packed ``_vec`` binary column;
+    the value width tells float32 from float64."""
+    col = col.combine_chunks()
+    _, offsets, values = col.buffers()
+    lo, hi = np.frombuffer(offsets, dtype=np.int32)[[col.offset, col.offset + len(col)]]
+    dtype = np.float32 if hi - lo == 4 * dim * len(col) else np.float64
+    raw = np.frombuffer(values, dtype=np.uint8)[lo:hi].view(dtype)
+    return raw.reshape(-1, dim).astype(np.float64)
 
 
 def lsh_topk(
@@ -253,11 +309,6 @@ def _auto_cap_col(df: DataFrame, n_buckets: int) -> Column:
     )
 
 
-def _corpus_count(df: DataFrame) -> DataFrame:
-    """One row: (_corpus_n = count(*))."""
-    return df.select(F.count(F.lit(1)).alias("_corpus_n"))
-
-
 def _with_corpus_count(sk: DataFrame, source: DataFrame) -> DataFrame:
     """Attach the broadcast one-row corpus count. Plans as a 1-row-build
     BroadcastNestedLoopJoin (Catalyst folds any constant equi-key and
@@ -265,90 +316,12 @@ def _with_corpus_count(sk: DataFrame, source: DataFrame) -> DataFrame:
     work, the standard scalar-broadcast shape. The no-cartesian plan tests
     permit exactly this node and nothing else (condition must reference
     ``_corpus_n``)."""
-    return sk.crossJoin(F.broadcast(_corpus_count(source)))
+    return sk.crossJoin(F.broadcast(source.select(F.count(F.lit(1)).alias("_corpus_n"))))
 
 
-# numpy-prefilter budget for near_dup_pairs: the corpus vector matrix is
-# broadcast to workers only when it fits comfortably in executor memory;
-# beyond this the operator falls back to the join-based exact verify (and
-# the right scale lever is n_planes, not the prefilter).
-PREFILTER_MAX_BYTES = 256 << 20
-# kept-pair slack below the verify threshold: ~8 orders of magnitude above
-# float64 summation-order error, so the screen can never drop a pair the
-# exact verify would emit.
-PREFILTER_MARGIN = 1e-4
-
-
-def _prefilter_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    min_cosine: float,
-) -> DataFrame:
-    """Conservative numpy cosine screen over candidate (id_a, id_b) rows.
-
-    The corpus (id -> vector) is collected once and broadcast (bounded by
-    PREFILTER_MAX_BYTES — the guide §8.4 "broadcast the plan" attach);
-    each Arrow batch of pairs is screened with one vectorized gather +
-    row-wise dot. Pairs whose approximate cosine is non-finite (zero
-    vectors => NaN) or whose ids miss the map are KEPT — only a clear
-    below-margin miss drops a row, so the exact verify downstream sees a
-    strict superset of its true output. Null or wrong-length corpus
-    vectors are left out of the map, so their pairs go to the exact
-    verify unscreened."""
-    import numpy as np
-
-    corpus = df.where(
-        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-    )
-    pdf = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).toPandas()
-    if len(pdf) == 0:
-        return pairs  # empty corpus: nothing to screen against
-    mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    # fully vectorized id -> row lookup: sorted id array + searchsorted
-    # (no per-value Python dict hits — the batch stream can be millions
-    # of rows); caller guarantees an integral id column
-    ids = np.asarray(pdf["_id"].to_numpy(), dtype=np.int64)
-    order = np.argsort(ids, kind="stable")
-    ids_sorted, perm = ids[order], order
-    bc = df.sparkSession.sparkContext.broadcast((ids_sorted, perm, mat, norms))
-    out_schema = pairs.schema
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        ids_s, pm, m, nr = bc.value
-
-        def rows_of(col):
-            raw = col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            pos = np.searchsorted(ids_s, raw)
-            pos_c = np.minimum(pos, ids_s.size - 1)
-            found = ids_s[pos_c] == raw
-            return np.where(found, pm[pos_c], -1)
-
-        for batch in batches:
-            n = len(batch)
-            if n == 0:
-                continue
-            ia, ib = rows_of(batch.column(0)), rows_of(batch.column(1))
-            keep = np.ones(n, dtype=bool)
-            ok = (ia >= 0) & (ib >= 0)
-            if ok.any():
-                va, vb = m[ia[ok]], m[ib[ok]]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    approx = np.einsum("ij,ij->i", va, vb) / (nr[ia[ok]] * nr[ib[ok]])
-                keep[np.flatnonzero(ok)] = (approx >= min_cosine) | ~np.isfinite(approx)
-            sel = pa.array(np.flatnonzero(keep), type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0).take(sel), batch.column(1).take(sel)],
-                names=[batch.schema.names[0], batch.schema.names[1]],
-            )
-
-    return pairs.mapInArrow(fn, out_schema)
+# float64 values per gathered side of a near-dup scoring block (8 MB),
+# so the gathers do not grow with bucket size
+VERIFY_BLOCK_VALUES = 1 << 20
 
 
 def near_dup_pairs(
@@ -362,160 +335,154 @@ def near_dup_pairs(
     seed: int = 42,
     max_bucket_size: int | str | None = "auto",
     corpus_n: int | None = None,
-    prefilter: str | None = "auto",
 ) -> DataFrame:
-    """Embedding near-duplicate pairs via LSH bucket SELF-join — never
-    all-pairs (round-2 fix of VERDICT "What's wrong" #1).
+    """Embedding near-duplicate pairs via LSH buckets — never all-pairs.
 
-    Plan shape: one sketch pass (n_tables rows/vector, map-local) ->
-    self-join per (table, bucket) -> distinct candidate pairs -> join
-    vectors back by id -> exact cosine verify >= threshold. Precision is
-    exact (verification step); recall per pair at angle theta is
+    Plan shape: one sketch pass (``n_tables`` rows per vector, each
+    carrying its packed vector; map-local) -> one exchange on (table,
+    bucket), sorted by (table, bucket, id) -> one mapInArrow pass that
+    scores every pair inside each bucket -> distinct (id_a, id_b) ->
+    ``round(cosine, 6) >= threshold``. No join, no Window, no driver
+    collect, no broadcast. Precision is exact (every pair is scored);
+    recall per pair at angle theta is
     1 - (1 - (1 - theta/pi)^n_planes)^n_tables — the 4x32 default gives
     ~0.998 at cosine 0.45 and ~1.0 above 0.6.
 
-    ``max_bucket_size`` (default ``"auto"`` — round-4 ADVICE fix) drops
-    (table, bucket) groups bigger than the cap before the self-join. The
-    round-3 fixed default of 1000 had a cliff: with n_planes=4 there are
-    only 16 buckets per table, so routine occupancy is ~N/16 and above
-    N ~ 16k EVERY bucket exceeded a fixed cap — the operator silently
-    returned empty. ``"auto"`` scales the cap with the corpus,
+    The scoring pass needs memory for one Arrow batch, the largest bucket
+    and one block of ``VERIFY_BLOCK_VALUES // dim`` pairs. Dots and norms
+    fold left to right in float64 (``_fold_dot``), so ``dot / (n_a * n_b)``
+    is bit-identical to ``cosine_expr``. The pass emits pairs whose raw
+    cosine is at least ``threshold - 1e-6``; Catalyst rounds and compares
+    them. A pair with a zero-norm vector has no cosine and is never
+    emitted.
+
+    ``max_bucket_size`` skips (table, bucket) buckets bigger than the cap.
+    The default ``"auto"`` (round-4 ADVICE fix of a fixed cap that emptied
+    the operator once routine occupancy N/2^n_planes crossed it) is
     ``max(1000, ceil(8 * N / 2^n_planes))``: routine buckets always
-    survive, while degenerate clusters (> 8x uniform share — hot in every
-    table, i.e. near-identical vectors that belong to exact dedup) are
-    still skipped. Self-join cost under auto therefore stays
-    O(N^2 * 64 / 4^n_planes) worst-case — raise ``n_planes`` (finer
-    buckets) as N grows; see ``near_dup_cap_stats`` for what a given cap
-    excludes on real data. An int pins a fixed cap; ``None`` disables
-    (verification runs only).
+    survive, while degenerate clusters (> 8x uniform share — near-identical
+    vectors that belong to exact dedup) are skipped. Scoring cost stays
+    O(N^2 * 64 / 4^n_planes) worst-case — raise ``n_planes`` as N grows;
+    ``near_dup_cap_stats`` reports what a cap excludes. An int pins a
+    fixed cap; ``None`` disables. ``n_planes="auto"`` resolves via
+    ``recommended_n_planes(N)``, keeping candidates ~4N at any N.
 
-    ``corpus_n`` (round-5 VERDICT #2): callers that already know N pass
-    it and the auto cap (and ``n_planes="auto"``) resolve to plan
-    LITERALS — no count subquery, no one-row broadcast join in the plan
-    (measured +16% on emb_near_dups in round 4). Left ``None``, auto
-    features fall back to a driver-side one-pass count (column-pruned
-    zero-column scan — cheap relative to the sketch pass at any scale).
+    Both autos take N from ``corpus_n`` when the caller knows it (a
+    parquet footer, a catalog), else from one driver-side ``df.count()``,
+    so the cap is a plain int before the plan is built.
 
-    ``n_planes="auto"`` (round-5 VERDICT #4) resolves via
-    ``recommended_n_planes(N)`` so production callers get scale-safe
-    bucket granularity out of the box — candidate volume stays ~4N as N
-    grows instead of going quadratic on a fixed plane count. The
-    golden-gated driver queries pin fixed counts for reproducibility.
-
-    ``prefilter="auto"`` (round 6, guide §3.2 "reduce the big side before
-    shuffling it" applied to the verify): when ``corpus_n`` is known AND
-    the vector matrix fits the broadcast budget
-    (``corpus_n * dim * 8 <= PREFILTER_MAX_BYTES``), collided pairs are
-    screened in a vectorized numpy pass against a broadcast copy of the
-    corpus BEFORE the distinct + vector-join + exact verify: a pair
-    survives iff its (pairwise-summed) approximate cosine clears
-    ``threshold - PREFILTER_MARGIN``. The margin (1e-4) is ~8 orders of
-    magnitude above float64 summation-order error, so the screen is a
-    strict SUPERSET filter — no false negatives — and every emitted pair
-    still comes from the EXACT sequential-fold Catalyst verify, so the
-    output is row-identical with the prefilter on or off (pinned by
-    tests). At the default parameters the screen cuts the distinct/join/
-    verify input from ~N^2*collision-rate pairs to ~the true pair count
-    (1.7M -> tens at the bench corpus). Falls back to the plain path
-    whenever corpus_n is unknown or the matrix exceeds the budget (the
-    100 TB case — there, raise n_planes per the docstring instead).
-    ``prefilter=None`` disables unconditionally.
+    Rows with a null id never pair. Null or wrong-length vectors fail the
+    sketch pass.
 
     Output: (id_a, id_b, cosine), id_a < id_b.
     """
+    import math
+
+    if corpus_n is None and "auto" in (n_planes, max_bucket_size):
+        corpus_n = df.count()  # one column-pruned pass, driver-side scalar
     if n_planes == "auto":
-        if corpus_n is None:
-            corpus_n = df.count()  # one column-pruned pass, driver-side scalar
         n_planes = recommended_n_planes(corpus_n)
-    sk = sketch_buckets(df, id_col, vec_col, dim, n_planes, n_tables, seed)
-    if max_bucket_size is not None:
-        # hot-bucket guard, ON BY DEFAULT (see operators/dedup.
-        # minhash_lsh_pairs for the full rationale): a (table, bucket) of B
-        # vectors emits B^2/2 candidates; skip buckets whose size says the
-        # sketch carries no information there. Count over a Window keyed
-        # like the self-join, so the mapInArrow sketch computes ONCE and
-        # the join reuses the window's (table, bucket) exchange (round-2
-        # ADVICE fix: the groupBy+join form recomputed the sketch pass).
-        w = Window.partitionBy("table", "bucket")
-        sk = sk.withColumn("_bsz", F.count(F.lit(1)).over(w))
-        if max_bucket_size == "auto" and corpus_n is not None:
-            # known N: the cap folds to a plan literal — no count subquery,
-            # no one-row broadcast join (round-5 VERDICT #2)
-            import math
-
-            cap = F.lit(
-                max(AUTO_CAP_FLOOR, math.ceil(AUTO_CAP_MULT * corpus_n / 2**n_planes))
-            ).cast("long")
-        elif max_bucket_size == "auto":
-            cap = _auto_cap_col(df, 2**n_planes)
-            sk = _with_corpus_count(sk, df)
-        else:
-            cap = F.lit(int(max_bucket_size)).cast("long")
-        sk = sk.where(F.col("_bsz") <= cap).select("_id", "table", "bucket")
-    a = sk.withColumnRenamed("_id", "id_a")
-    b = sk.withColumnRenamed("_id", "id_b")
-    collided = (
-        a.join(b, ["table", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+    if max_bucket_size == "auto":
+        cap = max(AUTO_CAP_FLOOR, math.ceil(AUTO_CAP_MULT * corpus_n / 2**n_planes))
+    else:
+        cap = None if max_bucket_size is None else int(max_bucket_size)
+    id_t = df.schema[id_col].dataType.simpleString()
+    sk = _sketch(
+        df.where(F.col(id_col).isNotNull()),
+        id_col, vec_col, dim, n_planes, n_tables, seed, True,
     )
-    id_type = df.schema[id_col].dataType.typeName()
-    if (
-        prefilter == "auto"
-        and corpus_n is not None
-        and 0 < corpus_n * dim * 8 <= PREFILTER_MAX_BYTES
-        and id_type in ("byte", "short", "integer", "long")
-    ):
-        # screen BEFORE the distinct: the screen is cheap and vectorized,
-        # so the (much larger) pre-distinct stream costs less to filter
-        # than to exchange — the distinct then runs on ~true-pair volume
-        collided = _prefilter_pairs(
-            df, collided, id_col, vec_col, dim, threshold - PREFILTER_MARGIN
+    scored = (
+        sk.repartition("table", "bucket")
+        .sortWithinPartitions("table", "bucket", "_id")
+        .mapInArrow(
+            _bucket_pair_scorer(dim, cap, threshold - 1e-6),
+            f"id_a {id_t}, id_b {id_t}, cosine double",
         )
-    cand = collided.dropDuplicates(["id_a", "id_b"])
-    return _exact_verify(df, cand, id_col, vec_col, threshold)
-
-
-def _exact_verify(
-    df: DataFrame, cand: DataFrame, id_col: str, vec_col: str, threshold: float
-) -> DataFrame:
-    """(id_a, id_b, cosine) for the candidate pairs whose exact cosine
-    clears ``threshold``. A pair with a null vector, or with vectors of
-    different lengths, gets a NULL cosine and is dropped."""
-    # Round-6 (guide §1.2 per-task work): the interpreted higher-order
-    # cosine fold was the verify stage's whole cost — and 2 of its 3
-    # folds (the norms) depend on ONE vector each, not the pair. Compute
-    # each side's norm once per VECTOR before the join; the per-pair
-    # work is then just the dot fold. cosine = dot / (n_a * n_b) with
-    # n_a/n_b the identical sqrt-of-fold doubles, so the result is
-    # bit-identical to the fused cosine_expr it replaces.
-    def _norm(c: Column) -> Column:
-        return F.sqrt(
-            F.aggregate(c, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v)
-        )
-
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("v_a"),
-        _norm(F.col(vec_col)).alias("_na"),
-    )
-    vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("v_b"),
-        _norm(F.col(vec_col)).alias("_nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", F.round(dot / (F.col("_na") * F.col("_nb")), 6))
+        scored.dropDuplicates(["id_a", "id_b"])
+        .withColumn("cosine", F.round("cosine", 6))
         .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
+
+
+def _bucket_pair_scorer(dim: int, cap: int | None, min_cosine: float):
+    """mapInArrow kernel for ``near_dup_pairs`` over (_id, table, bucket,
+    _vec) rows sorted by (table, bucket, _id): (id_a, id_b, raw cosine) for
+    every pair inside a bucket with id_a < id_b and cosine >=
+    ``min_cosine``. A bucket's rows may straddle Arrow batches, so the
+    last (possibly unfinished) bucket of each batch waits for the next."""
+
+    def score(batches):
+        import pyarrow as pa
+
+        carry = None
+        for batch in batches:
+            if len(batch) == 0:
+                continue
+            tbl = pa.Table.from_batches([batch])
+            if carry is not None:
+                tbl = pa.concat_tables([carry, tbl])
+            t, b = tbl.column("table").to_numpy(), tbl.column("bucket").to_numpy()
+            cut = len(t) - int(np.count_nonzero((t == t[-1]) & (b == b[-1])))
+            if cut:
+                yield from _score_buckets(tbl.slice(0, cut), dim, cap, min_cosine)
+            carry = tbl.slice(cut)
+        if carry is not None:
+            yield from _score_buckets(carry, dim, cap, min_cosine)
+
+    return score
+
+
+def _score_buckets(tbl, dim: int, cap: int | None, min_cosine: float):
+    """Score whole sorted buckets (at least one row); see
+    ``_bucket_pair_scorer``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t, b = tbl.column("table").to_numpy(), tbl.column("bucket").to_numpy()
+    first = np.r_[True, (t[1:] != t[:-1]) | (b[1:] != b[:-1])]
+    size = np.bincount(np.cumsum(first) - 1)
+    ok = size >= 2
+    if cap is not None:
+        ok &= size <= cap
+    rows = np.flatnonzero(np.repeat(ok, size))  # buckets with pairs to score
+    if rows.size == 0:
+        return
+    tbl, first = tbl.take(rows), first[rows]
+    m = len(rows)
+    bucket = np.cumsum(first) - 1
+    end = np.cumsum(np.bincount(bucket))[bucket]  # one past each row's bucket
+    ids = tbl.column("_id").combine_chunks()
+    # equal ids are adjacent (sorted) and share a rank, so never pair
+    new_id = pc.not_equal(ids[1:], ids[:-1]).to_numpy(zero_copy_only=False)
+    id_rank = np.cumsum(first | np.r_[True, new_id])
+    vt = np.ascontiguousarray(_unpack(tbl.column("_vec"), dim).T)  # (dim, m)
+    norm = np.sqrt(_fold_dot(vt, vt))
+    # row i pairs with the rows after it in its bucket; score the pairs in
+    # row-aligned blocks of about VERIFY_BLOCK_VALUES // dim pairs
+    n_partners = end - np.arange(m) - 1
+    through = np.cumsum(n_partners)
+    block = max(1, VERIFY_BLOCK_VALUES // dim)
+    lo = 0
+    while lo < m:
+        done = through[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(through, done + block, side="right")))
+        cnt = n_partners[lo:hi]
+        ia = np.repeat(np.arange(lo, hi), cnt)
+        ib = ia + 1 + np.arange(ia.size) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        keep = id_rank[ia] != id_rank[ib]
+        ia, ib = ia[keep], ib[keep]
+        den = norm[ia] * norm[ib]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = _fold_dot(np.take(vt, ia, axis=1), np.take(vt, ib, axis=1)) / den
+        hit = (den > 0) & (cos >= min_cosine)
+        if hit.any():
+            yield pa.RecordBatch.from_arrays(
+                [ids.take(ia[hit]), ids.take(ib[hit]), pa.array(cos[hit])],
+                names=["id_a", "id_b", "cosine"],
+            )
+        lo = hi
 
 
 def bucket_cap_stats(
@@ -864,51 +831,6 @@ def ivfpq_index(
     return in_df.mapInArrow(_index, out_schema)
 
 
-def pq_reconstruct_col(df: DataFrame, dim: int, books: np.ndarray,
-                       codes_col: str = "codes") -> DataFrame:
-    """Append ``approx_vec array<float>``: codes -> concatenated codewords.
-
-    Round-5: fully vectorized — ``flatten().to_numpy()`` on the way in
-    (honors list offsets, no ``to_pylist``), offsets+values ``ListArray``
-    on the way out, and empty Arrow batches reshape cleanly instead of
-    crashing on 1-D ``codes[:, s]`` (ADVICE low fix). Utility/debug path;
-    ``ivfpq_topk`` scores candidates with ``pq_adc_score_col`` instead,
-    which never materializes the ``dim`` floats this kernel emits."""
-    m_sub, _k_codes, dsub = books.shape
-    out_fields = list(df.schema.fields) + [
-        sqltypes.StructField("approx_vec", sqltypes.ArrayType(sqltypes.FloatType()), False)
-    ]
-    out_schema = sqltypes.StructType(out_fields)
-    names = [f.name for f in df.schema.fields]
-    codes_idx = names.index(codes_col)
-
-    def _rec(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = len(batch)
-            codes = (
-                batch.column(codes_idx)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, m_sub)
-                .astype(np.int64, copy=False)
-            )
-            approx = np.empty((n, dim), dtype=np.float32)
-            for s in range(m_sub):
-                approx[:, s * dsub : (s + 1) * dsub] = books[s][codes[:, s]]
-            arrays = [batch.column(i) for i in range(len(names))]
-            arrays.append(
-                pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n + 1) * dim, dim, dtype=np.int32)),
-                    pa.array(approx.reshape(-1)),
-                )
-            )
-            yield pa.RecordBatch.from_arrays(arrays, names=names + ["approx_vec"])
-
-    return df.mapInArrow(_rec, out_schema)
-
-
 def pq_adc_luts(Q: np.ndarray, books: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Driver-side ADC (asymmetric distance computation) lookup tables.
 
@@ -989,108 +911,6 @@ def pq_adc_score_col(
     return df.mapInArrow(_score, out_schema)
 
 
-def pq_adc_score_prune_col(
-    df: DataFrame,
-    books: np.ndarray,
-    lut_dot: np.ndarray,
-    lut_nrm: np.ndarray,
-    q_norm: np.ndarray,
-    refine: int,
-    qid_col: str = "query_id",
-    nid_col: str = "neighbor_id",
-    qidx_col: str = "_q_idx",
-    codes_col: str = "codes",
-    out_col: str = "approx_cos",
-) -> DataFrame:
-    """ADC scoring FUSED with a per-partition partial top-``refine``: the
-    map-side combine for the global shortlist window (round 5).
-
-    Same scoring math as ``pq_adc_score_col`` (LUT gather, fold-ordered
-    sums, Spark HALF_UP round-6), but instead of emitting every candidate
-    this kernel keeps a running per-query top-``refine`` buffer across the
-    partition's Arrow batches — under the SAME strict total order the
-    downstream window uses (approx_cos desc, neighbor_id asc), so the
-    global top-``refine`` of the union of per-partition survivors is
-    exactly the global top-``refine`` of all candidates. The window
-    shuffle input drops from |candidates| (~n_probe/n_cells × corpus ×
-    queries) to ≤ n_partitions × n_queries × refine rows, and the
-    ``codes``/``_q_idx`` columns never cross the exchange at all.
-
-    Emits (qid_col, nid_col, out_col) only.
-    """
-    import pyarrow.compute as pc
-
-    m_sub = books.shape[0]
-    names = [f.name for f in df.schema.fields]
-    codes_idx = names.index(codes_col)
-    qidx_idx = names.index(qidx_col)
-    qid_field = df.schema[qid_col].dataType
-    nid_field = df.schema[nid_col].dataType
-    out_schema = sqltypes.StructType(
-        [
-            sqltypes.StructField(qid_col, qid_field, False),
-            sqltypes.StructField(nid_col, nid_field, False),
-            sqltypes.StructField(out_col, sqltypes.DoubleType(), False),
-        ]
-    )
-    s_idx = np.arange(m_sub)
-    sort_keys = [
-        (qidx_col, "ascending"),
-        (out_col, "descending"),
-        (nid_col, "ascending"),
-    ]
-
-    def _prune(tbl):
-        """Keep the first ``refine`` rows per _q_idx under the window's
-        total order — vectorized (one multi-key sort + run-length ranks)."""
-        import pyarrow as pa
-
-        idx = pc.sort_indices(tbl, sort_keys=sort_keys)
-        tbl = tbl.take(idx)
-        qi = tbl.column(qidx_col).to_numpy(zero_copy_only=False)
-        n = len(qi)
-        if n == 0:
-            return tbl
-        starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-        group = np.cumsum(np.r_[False, qi[1:] != qi[:-1]])
-        rank = np.arange(n) - starts[group]
-        return tbl.filter(pa.array(rank < refine))
-
-    def _score_prune(batches):
-        import pyarrow as pa
-
-        buf = None
-        for batch in batches:
-            n = len(batch)
-            codes = (
-                batch.column(codes_idx)
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, m_sub)
-                .astype(np.int64, copy=False)
-            )
-            qi = batch.column(qidx_idx).to_numpy(zero_copy_only=False).astype(np.int64)
-            dot = lut_dot[qi[:, None], s_idx[None, :], codes].cumsum(axis=1)[:, -1] if n else np.empty(0)
-            nrm = lut_nrm[s_idx[None, :], codes].cumsum(axis=1)[:, -1] if n else np.empty(0)
-            cos = dot / (q_norm[qi] * np.sqrt(nrm))
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6  # Spark round(x, 6) HALF_UP
-            part = pa.table(
-                {
-                    qid_col: batch.column(names.index(qid_col)),
-                    nid_col: batch.column(names.index(nid_col)),
-                    qidx_col: batch.column(qidx_idx),
-                    out_col: pa.array(cos, type=pa.float64()),
-                }
-            )
-            buf = part if buf is None else _prune(pa.concat_tables([buf, part]))
-        if buf is not None and len(buf):
-            out = _prune(buf).drop_columns([qidx_col])
-            for out_batch in out.to_batches():
-                yield out_batch
-
-    return df.mapInArrow(_score_prune, out_schema)
-
-
 def _probe_csr(Q: np.ndarray, cents: np.ndarray, n_cells: int, n_probe: int):
     """Driver-side inversion of the query probe sets: CSR arrays
     ``(offsets, qidx)`` such that ``qidx[offsets[c]:offsets[c+1]]`` are the
@@ -1159,8 +979,8 @@ def ivfpq_probe_prune(
     cents = _centroids(dim, n_cells, seed)
     offsets, probe_qidx = _probe_csr(Q, cents, n_cells, n_probe)
     Q64 = np.ascontiguousarray(Q, dtype=np.float64)
-    # fold-ordered query norms (cumsum, like cosine_expr's aggregate)
-    q_norm_fold = np.sqrt(np.cumsum(Q64 * Q64, axis=1)[:, -1]) if Q64.size else np.zeros(0)
+    # fold-ordered query norms, like cosine_expr's aggregate
+    q_norm_fold = np.sqrt(_fold_dot(Q64.T, Q64.T)) if Q64.size else np.zeros(0)
     id_field = corpus.schema[id_col].dataType
     in_df = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
     out_schema = sqltypes.StructType(
@@ -1234,22 +1054,11 @@ def ivfpq_probe_prune(
             cos = dot / (q_norm[qi] * np.sqrt(nrm))
             cos = np.floor(cos * 1e6 + 0.5) / 1e6  # Spark round(x, 6) HALF_UP
             # exact cosine for the batch's candidates, in place: the full
-            # vectors are in hand, and a column-wise left-to-right fold is
+            # vectors are in hand, and _fold_dot's left-to-right fold is
             # bit-identical to cosine_expr's aggregate + round(…, 6).
-            # Implementation notes that matter on this host: (a) NEVER
-            # np.cumsum(axis=1) for fold sums — its per-row accumulate
-            # overhead is ~100x a column loop; (b) keep work arrays
-            # batch-sized so allocations recycle from the pool (fresh
-            # multi-MB allocations hit host paging-wave stalls); (c)
-            # corpus-row norms fold once per ROW, not per candidate.
-            nrow = np.zeros(n)
-            for d in range(dim):
-                nrow = nrow + v[:, d] * v[:, d]
-            vr = v[row_rep]
-            qv = Q64[qi]
-            dot_e = np.zeros(row_rep.size)
-            for d in range(dim):
-                dot_e = dot_e + vr[:, d] * qv[:, d]
+            # Corpus-row norms fold once per ROW, not per candidate.
+            nrow = _fold_dot(v.T, v.T)
+            dot_e = _fold_dot(v[row_rep].T, Q64[qi].T)
             cos_e = dot_e / (q_norm_fold[qi] * np.sqrt(nrow[row_rep]))
             cos_e = np.floor(cos_e * 1e6 + 0.5) / 1e6
             part = pa.table(

@@ -218,14 +218,14 @@ def emb_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def emb_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs (cosine >= 0.45) via LSH bucket self-join.
+    """Embedding near-dup pairs (cosine >= 0.45) scored inside LSH buckets.
 
     The oracle is brute-force exact cosine over all pairs (round-4: a
     numpy golden using Spark's sequential fold accumulation —
     fixtures/generate.py:ensure_golden_near_dups — so a cosine at a 1e-6
     rounding boundary cannot flip between engines), so the driver
     gate checks LSH recall AND precision: precision is structurally exact
-    (candidates are cosine-verified), and recall is 1.0 at this scale with
+    (every bucket pair is cosine-scored), and recall is 1.0 at this scale with
     4 planes x 32 tables (per-pair miss probability ~2e-3 at the 0.45
     threshold, ~0 above 0.6; seeded hyperplanes make the outcome
     deterministic, and this configuration was verified against the exact
@@ -354,16 +354,16 @@ def image_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
 def image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end MULTIMODAL dedup (round 4): real from-spec PPM/PGM/BMP
     decode -> NN-resize -> mean-centered pixel embedding (one mapInArrow
-    pass, functions/multimodal.with_image_embeddings) -> LSH bucket
-    self-join near-dup pairs (operators/similarity.near_dup_pairs) — the
+    pass, functions/multimodal.with_image_embeddings) -> near-dup pairs
+    scored inside LSH buckets (operators/similarity.near_dup_pairs) — the
     composite a training-data pipeline runs to dedup crawled images, with
     the embedding kernel swappable for a model encoder at no plan change.
     Truncated payloads drop at the decode stage (F1 semantics). Oracle:
     all-pairs exact cosine over the INDEPENDENT pixel embeddings
     (fixtures/generate.ensure_golden_image_near_dups, fold-order exact).
 
-    Scale shape: decode+embed is map-local; candidates come from the
-    (table, bucket) sketch self-join, never all-pairs; the auto cap
+    Scale shape: decode+embed is map-local; pairs come from inside each
+    (table, bucket) of the sketch, never all-pairs; the auto cap
     bounds degenerate boilerplate-image clusters.
     """
     from dataflow_geobeam_spark.fixtures.generate import (
@@ -377,14 +377,15 @@ def image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = mm.with_image_embeddings(
         imgs, "img_id", "bytes", width=EMB_IMG_W, height=EMB_IMG_H
     )
-    # near_dup_pairs references its input 3x (sketch + both exact-verify
-    # sides). Over a parquet scan those are cheap re-scans; here the input
-    # is a COMPUTED decode+embed pass, so localCheckpoint it (round-5
-    # ADVICE fix: persist() pinned cache blocks for the whole session —
-    # checkpoint blocks are GC'd with the DataFrame once the query
-    # materializes, so gate/bench runs of many queries don't accumulate).
-    # The 100 TB form materializes the embedding table explicitly (one
-    # decode job, then dedup reads parquet).
+    # near_dup_pairs reads its input once (the sketch), but its auto cap
+    # needs N, the number of embeddings that decoded. Counting a COMPUTED
+    # decode+embed pass would decode everything twice, so localCheckpoint
+    # it and count the blocks (round-5 ADVICE fix: persist() pinned cache
+    # blocks for the whole session — checkpoint blocks are GC'd with the
+    # DataFrame once the query materializes, so gate/bench runs of many
+    # queries don't accumulate). The 100 TB form materializes the
+    # embedding table explicitly (one decode job, then dedup reads
+    # parquet and its footer gives N).
     emb = emb.localCheckpoint(eager=True)
     return similarity.near_dup_pairs(
         emb,

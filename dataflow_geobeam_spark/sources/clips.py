@@ -107,13 +107,3 @@ def stream_clips(
     if with_bucket:
         df = df.withColumn("bucket", F.substring("clip_id", 1, 2))
     return df
-
-
-def stream_transcripts(
-    spark: SparkSession, fixture_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    return (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(_path(fixture_dir, "transcripts_late"))
-    )

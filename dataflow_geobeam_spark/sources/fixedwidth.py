@@ -36,16 +36,3 @@ def read_fixed_width(
         cols.append(c.cast(typ).alias(name))
         pos += width
     return df.select(*cols)
-
-
-def parse_fixed_width_col(col, fields: list[FieldSpec], trim: bool = True):
-    """Same slicing as a struct expression over an arbitrary string column."""
-    parts = []
-    pos = 1
-    for name, width, typ in fields:
-        c = F.substring(col, pos, width)
-        if trim:
-            c = F.trim(c)
-        parts.append(c.cast(typ).alias(name))
-        pos += width
-    return F.struct(*parts)

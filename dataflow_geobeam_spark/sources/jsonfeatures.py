@@ -29,11 +29,3 @@ def read_feature_collection(
     return raw.select(*top_cols, F.explode(F.col(features_field)).alias("feature")).select(
         *top_cols, "feature.*"
     )
-
-
-def from_json_messages(df: DataFrame, value_col: str, schema) -> DataFrame:
-    """Streaming analog of the reference's ``HandleMessage`` JSON parse
-    (``geobeam/examples/streaming_pubsub.py:28-47``): bytes/string messages
-    -> typed columns via ``from_json`` — per-batch vectorized, no Python."""
-    parsed = df.withColumn("_m", F.from_json(F.col(value_col).cast("string"), schema))
-    return parsed.select("_m.*")

@@ -63,11 +63,11 @@ def test_cap_preserves_results_on_healthy_corpus(spark, sf_dir):
 
 
 def test_cap_does_not_recompute_sketch(spark, sf_dir):
-    """The guard is a Window count over the already-shuffled sketch, NOT a
-    groupBy+join-back (which recomputed the mapInArrow sketch pass — the
-    round-2 ADVICE finding). The plan must contain exactly the 2 MapInArrow
-    nodes the self-join always had, plus a Window, and no extra aggregate
-    join of bucket sizes."""
+    """The cap is a plan-time int that the scoring pass checks per bucket,
+    NOT a bucket-size aggregate joined back (which recomputed the
+    mapInArrow sketch pass — the round-2 ADVICE finding) nor a Window. The
+    plan must hold the sketch once, the scoring pass once, and no Window
+    or join."""
     from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
@@ -75,7 +75,8 @@ def test_cap_does_not_recompute_sketch(spark, sf_dir):
                          n_planes=4, n_tables=32)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 2
-    assert "Window" in plan
+    assert plan.count("_sketch_batches") == 1
+    assert "Window" not in plan and "Join" not in plan
 
 
 # ---------------------------------------------------------------------------

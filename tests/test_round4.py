@@ -150,6 +150,10 @@ def test_minhash_self_join_reuses_signature_exchange(spark, sf_dir):
 
 
 def test_near_dup_self_join_reuses_sketch_exchange(spark, sf_dir):
+    """near_dup_pairs scores inside buckets instead of self-joining: the
+    sketch (which carries the vectors) executes ONCE, crosses one
+    (table, bucket) exchange into the scoring pass, and nothing joins
+    before the distinct."""
     from dataflow_geobeam_spark.operators.similarity import near_dup_pairs
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
@@ -157,7 +161,10 @@ def test_near_dup_self_join_reuses_sketch_exchange(spark, sf_dir):
         emb, "vec_id", "embedding", threshold=0.45, dim=64, n_planes=4, n_tables=32
     )
     plan = _executed_final_plan(out)
-    assert "ReusedExchange" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("_sketch_batches") == 1
+    assert final.count("hashpartitioning(table") == 1
+    assert "Join" not in final and "ReusedExchange" not in final
 
 
 # ---------------------------------------------------------------------------

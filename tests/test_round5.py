@@ -146,10 +146,10 @@ def test_pq_adc_score_matches_reconstruction_math(spark):
 
 
 def test_pq_kernels_handle_empty_and_match_reconstruction(spark):
-    """pq_encode / pq_reconstruct_col / pq_adc_score_col survive 0-row
-    inputs (ADVICE low fix: 1-D reshape crash) and reconstruct matches
-    the codebooks."""
+    """pq_encode / pq_adc_score_col survive 0-row inputs (ADVICE low fix:
+    1-D reshape crash)."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from dataflow_geobeam_spark.operators import similarity as S
 
@@ -159,22 +159,11 @@ def test_pq_kernels_handle_empty_and_match_reconstruction(spark):
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert S.pq_encode(empty, "vec_id", "embedding", dim, books).count() == 0
-    enc = S.pq_encode(empty, "vec_id", "embedding", dim, books)
-    assert S.pq_reconstruct_col(enc, dim, books).count() == 0
-
-    # non-empty: reconstruction equals codeword concatenation (float32)
-    vecs = rng.standard_normal((10, dim)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(10)], ["vec_id", "embedding"]
+    enc = S.pq_encode(empty, "vec_id", "embedding", dim, books).withColumn(
+        "_q_idx", F.lit(0).cast("long")
     )
-    rows = S.pq_reconstruct_col(
-        S.pq_encode(df, "vec_id", "embedding", dim, books), dim, books
-    ).collect()
-    for r in rows:
-        want = np.concatenate([books[s][r.codes[s]] for s in range(m_sub)]).astype(
-            np.float32
-        )
-        assert np.array_equal(np.asarray(r.approx_vec, dtype=np.float32), want)
+    lut_dot, lut_nrm, q_norm = S.pq_adc_luts(rng.standard_normal((1, dim)), books)
+    assert S.pq_adc_score_col(enc, books, lut_dot, lut_nrm, q_norm).count() == 0
 
 
 def test_ivfpq_index_matches_separate_passes(spark):
@@ -204,65 +193,6 @@ def test_ivfpq_index_matches_separate_passes(spark):
     # fused index is ONE map stage: no exchange in the plan
     plan = S.ivfpq_index(df, "vec_id", "embedding", dim, n_cells, books)
     assert "Exchange" not in plan._jdf.queryExecution().executedPlan().toString()
-
-
-def test_pq_adc_score_prune_matches_unpruned_topk(spark):
-    """The fused score+partial-top-refine kernel must yield exactly the
-    same global top-``refine`` shortlist as scoring everything and
-    windowing (same strict total order), across multiple partitions and
-    Arrow batches."""
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from dataflow_geobeam_spark.operators import similarity as S
-
-    rng = np.random.default_rng(17)
-    dim, m_sub, k_codes, n, nq, refine = 32, 4, 16, 500, 5, 7
-    books = S.train_pq_codebooks(rng.standard_normal((64, dim)), m_sub, k_codes)
-    Q = rng.standard_normal((nq, dim))
-    lut_dot, lut_nrm, q_norm = S.pq_adc_luts(Q, books)
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)], ["vec_id", "embedding"]
-    ).repartition(8)
-    cand = (
-        S.pq_encode(df, "vec_id", "embedding", dim, books)
-        .withColumn("_q_idx", (F.col("_id") % nq).cast("int"))
-        .select(
-            F.col("_q_idx").cast("long").alias("query_id"),
-            F.col("_id").alias("neighbor_id"),
-            "codes",
-            "_q_idx",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cos"), F.asc("neighbor_id")
-    )
-    want = {
-        (r.query_id, r.neighbor_id, r.approx_cos)
-        for r in S.pq_adc_score_col(cand, books, lut_dot, lut_nrm, q_norm)
-        .withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= refine)
-        .select("query_id", "neighbor_id", "approx_cos")
-        .collect()
-    }
-    got = {
-        (r.query_id, r.neighbor_id, r.approx_cos)
-        for r in S.pq_adc_score_prune_col(
-            cand, books, lut_dot, lut_nrm, q_norm, refine
-        )
-        .withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= refine)
-        .collect()
-    }
-    assert got == want and len(want) == nq * refine
-    # empty input flows through
-    empty = cand.where(F.col("neighbor_id") < 0)
-    assert (
-        S.pq_adc_score_prune_col(empty, books, lut_dot, lut_nrm, q_norm, refine).count()
-        == 0
-    )
 
 
 # ---------------------------------------------------------------------------

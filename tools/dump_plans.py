@@ -148,20 +148,19 @@ ANNOTATED = {
         "scan, no broadcast, no cartesian."
     ),
     "emb_near_dups_d256": (
-        "dim-256 near-dup (round 3). Expect: the near_dup_pairs shape at "
-        "realistic width — 2 MapInArrow sketch passes, Window count hot-"
-        "bucket guard riding the (table,bucket) exchange, no cartesian. "
-        "Round 5: the auto cap folds to a PLAN LITERAL (corpus_n from the "
-        "parquet footer) — no count subquery, no 1-row "
-        "BroadcastNestedLoopJoin; runtime ReusedExchange collapses the "
-        "duplicated sketch subtree (pinned in test_round4)."
+        "dim-256 near-dup. Expect: the near_dup_pairs shape at realistic "
+        "width — ONE MapInArrow sketch pass whose rows carry the packed "
+        "vector, ONE hashpartitioning(table, bucket) exchange + Sort on "
+        "(table, bucket, _id), ONE MapInArrow scoring pass, then the "
+        "(id_a, id_b) distinct and the round(cosine, 6) filter. No Join, no "
+        "Window, no BroadcastExchange, no cartesian: the hot-bucket cap is "
+        "an int inside the scoring pass (corpus_n from the parquet footer)."
     ),
     "emb_near_dups": (
-        "LSH near-dup. Expect: one ArrowEvalPython/mapInArrow sketch pass, "
-        "SortMergeJoin/ShuffledHashJoin keyed on (table, bucket), NO "
-        "CartesianProduct and no pairwise nested-loop join (round-1 "
-        "defect); round 5: NO BroadcastNestedLoopJoin either — the auto "
-        "cap is a plan literal via corpus_n (see emb_near_dups_d256 note)."
+        "LSH near-dup. Expect: the emb_near_dups_d256 shape at dim 64 — "
+        "sketch MapInArrow -> (table, bucket) exchange + Sort -> scoring "
+        "MapInArrow -> distinct; NO CartesianProduct and no join of any "
+        "kind (round-1 defect: pairwise nested-loop join)."
     ),
     "image_thumbnails": (
         "Real multimodal decode (rounds 4-5). Expect: ONE MapInArrow node "
