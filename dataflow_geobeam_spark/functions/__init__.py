@@ -1,7 +1,6 @@
 """Vectorized column functions: decode, validity, audio features, text."""
 
 from dataflow_geobeam_spark.functions.decode import (  # noqa: F401
-    decode_metrics_struct,
     with_decoded_metrics,
     with_decoded_pcm,
 )

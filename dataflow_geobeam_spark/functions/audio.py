@@ -135,7 +135,7 @@ def _pcm16(y):
 
 def _pcm16_row(clip, digest: bool) -> tuple:
     """(decoded rate, n_samples, PCM16 bytes of the clip or their md5)."""
-    q = _pcm16(clip.pcm)
+    q = _pcm16(clip.data)
     return int(clip.sr), int(q.shape[0]), _payload(q.tobytes(), digest)
 
 
@@ -150,7 +150,7 @@ def _rounded_vector(kernel):
     ``None`` (sub-frame clip) gives a NULL."""
 
     def per_clip(c):
-        v = kernel(c.pcm, c.sr)
+        v = kernel(c.data, c.sr)
         return [(None if v is None else (np.floor(v * 1e6 + 0.5) / 1e6).tolist(),)]
 
     return per_clip
@@ -201,7 +201,7 @@ def with_spectral_metrics(
     """
     return clip_kernel(
         df,
-        lambda c: [spectral_features_np(c.pcm, c.sr) or (None, None, None)],
+        lambda c: [spectral_features_np(c.data, c.sr) or (None, None, None)],
         [
             StructField("spectral_centroid_hz", DoubleType()),
             StructField("spectral_bandwidth_hz", DoubleType()),
@@ -276,7 +276,7 @@ def with_fingerprints(
     short to frame => NULL fp (F1/make_valid semantics)."""
 
     def per_clip(c):
-        toks = fingerprint_np(c.pcm, c.sr)
+        toks = fingerprint_np(c.data, c.sr)
         return [(toks.tolist(), toks.size) if toks.size else (None, None)]
 
     return clip_kernel(
@@ -353,7 +353,7 @@ def with_resampled_pcm16(
     sample rate out."""
 
     def per_clip(c):
-        q = _pcm16(resample_linear_np(c.pcm, c.sr, target_sr))
+        q = _pcm16(resample_linear_np(c.data, c.sr, target_sr))
         return [(_payload(q.tobytes(), digest), q.size)]
 
     return clip_kernel(
@@ -617,7 +617,7 @@ def with_speech_segments(
     (Catalyst-identical length/md5 of the wav chunk) instead of the
     chunk itself — see with_augmented_noise."""
     def per_clip(c):
-        rms = frame_rms_np(c.pcm, c.sr, frame_ms, hop_ms)
+        rms = frame_rms_np(c.data, c.sr, frame_ms, hop_ms)
         if rms is None:
             return []
         rms = np.floor(rms * 1e6 + 0.5) / 1e6  # gate-identical doubles
@@ -625,7 +625,7 @@ def with_speech_segments(
         hop = max(1, int(c.sr * hop_ms / 1000))
         rows = []
         for k, (a, b) in enumerate(segment_spans_np(rms, frame_ms, hop_ms)):
-            wav = codecs.encode_wav(c.pcm[a * hop : b * hop + frame], c.sr)
+            wav = codecs.encode_wav(c.data[a * hop : b * hop + frame], c.sr)
             tail = (len(wav), _payload(wav, digest)) if digest else (wav,)
             rows.append((k + 1, a * hop_ms, b * hop_ms + frame_ms, *tail))
         return rows
@@ -873,7 +873,7 @@ def with_augmented_noise(
     """
     return clip_kernel(
         df,
-        lambda c: [_wav_row(augment_noise_np(c.pcm, _clip_key(c), snr_db), c.sr, digest)],
+        lambda c: [_wav_row(augment_noise_np(c.data, _clip_key(c), snr_db), c.sr, digest)],
         [StructField("n_samples", LongType(), False), _payload_field("aug", digest, False)],
         keep=[StructField(id_col, StringType(), False)] + [df.schema[c] for c in passthrough],
         bytes_col=bytes_col,
@@ -921,7 +921,7 @@ def with_speed_perturb(
     speeds = tuple(float(s) for s in speeds)
 
     def per_clip(c):
-        return [(s, *_wav_row(speed_perturb_np(c.pcm, c.sr, s), c.sr, digest)) for s in speeds]
+        return [(s, *_wav_row(speed_perturb_np(c.data, c.sr, s), c.sr, digest)) for s in speeds]
 
     return clip_kernel(
         df,
@@ -996,7 +996,7 @@ def with_specaugment(
     t0, t_w, n_frames, sa_mel array<double> round-6); undecodable or
     sub-frame clips yield no row (filter_invalid semantics)."""
     def per_clip(c):
-        res = specaugment_means_np(c.pcm, c.sr, _clip_key(c))
+        res = specaugment_means_np(c.data, c.sr, _clip_key(c))
         if res is None:
             return []
         *head, mean = res
@@ -1068,7 +1068,7 @@ def with_normalized_loudness(
     with_augmented_noise."""
     return clip_kernel(
         df,
-        lambda c: [_wav_row(normalize_loudness_np(c.pcm, target_rms), c.sr, digest)],
+        lambda c: [_wav_row(normalize_loudness_np(c.data, target_rms), c.sr, digest)],
         [StructField("n_samples", LongType(), False), _payload_field("norm", digest, False)],
         keep=[StructField(id_col, StringType(), False)],
         bytes_col=bytes_col,
@@ -1149,7 +1149,7 @@ def with_reverb(
     with_augmented_noise."""
     return clip_kernel(
         df,
-        lambda c: [_wav_row(augment_reverb_np(c.pcm, c.sr, _clip_key(c)), c.sr, digest)],
+        lambda c: [_wav_row(augment_reverb_np(c.data, c.sr, _clip_key(c)), c.sr, digest)],
         [StructField("n_samples", LongType(), False), _payload_field("rev", digest, False)],
         keep=[StructField(id_col, StringType(), False)],
         bytes_col=bytes_col,

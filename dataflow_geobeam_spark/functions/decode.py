@@ -1,4 +1,4 @@
-"""Vectorized codec->PCM decode and the one per-clip kernel runner.
+"""Vectorized payload decode and the one per-clip kernel runner.
 
 Graft analog of the reference's per-element reprojection+repair stage
 (``/root/reference/geobeam/fn.py:23-53`` ``make_valid``;
@@ -9,40 +9,52 @@ call handles an entire Arrow batch of clips.
 Implementation note (measured on this harness): for ~50 KB binary payloads,
 ``mapInArrow`` moves data JVM->Python ~5x faster than the pandas-UDF path,
 because Arrow binary stays a zero-copy buffer instead of being re-boxed as
-Python ``bytes`` inside a pandas Series twice. Every decode-per-clip kernel
-in the engine therefore runs through ``clip_kernel``, the single
-``mapInArrow`` call site for decoded audio. Its contract:
+Python ``bytes`` inside a pandas Series twice. Every per-payload kernel in
+``functions/`` and ``sources/`` (audio, image, WebM, tar) therefore runs
+through ``clip_kernel``, their single ``mapInArrow`` call site. Its
+contract:
 
 * **Kept columns.** Output rows are ``take(row_idx)`` of the kept input
   columns followed by one column per out field. 1:1 kernels keep every
   input column but the payload; row-producing kernels keep
   ``(id, *passthrough)``. ``per_clip`` returns 0..N output tuples per clip,
   so row explosion and passthrough need no extra code.
-* **Decode failure** (null payload, malformed payload, unknown codec) gives
-  one of three results, chosen by the wrapper: a row of NULL outputs, a
-  fixed failure row (``with_decoded_metrics``: ``decode_ok=false`` with
-  zeroed metrics), or no row — the analog of ``make_valid`` returning
-  ``None`` + ``filter_invalid`` dropping it (``geobeam/fn.py:56-88``). Only
-  the decode is guarded: a kernel that raises on a decoded clip fails the
-  task instead of hiding a bug as a null.
-* **Decoders.** ``"codec"`` decodes under the row's codec label and prefers
-  the declared sample rate over the decoded one; ``"flac"`` decodes every
-  payload as FLAC; ``"sniff"`` picks the container from magic bytes.
-  ``"flac"`` and ``"sniff"`` report the decoded rate.
+* **Decode failure** (null payload, malformed payload, unknown codec or
+  container) gives one of three results, chosen by the wrapper: a row of
+  NULL outputs (the audio feature kernels, ``with_thumbnails``), a fixed
+  failure row (``with_decoded_metrics``: ``decode_ok=false`` with zeroed
+  metrics), or no row (the augmentations, ``with_image_embeddings``,
+  ``with_video_block_index``, ``explode_tar_members``) — the analog of
+  ``make_valid`` returning ``None`` + ``filter_invalid`` dropping it
+  (``geobeam/fn.py:56-88``). Only the decode is guarded: a kernel that
+  raises on a decoded clip fails the task instead of hiding a bug as a
+  null.
+* **Decoders** (``Clip.data`` is what the decoder returns):
+
+  * ``"codec"`` — float32 PCM decoded under the row's codec label; the
+    declared sample rate wins over the decoded one.
+  * ``"flac"`` — every payload decoded as FLAC; decoded rate.
+  * ``"sniff"`` — container picked from magic bytes; decoded rate.
+  * ``"image"`` — ``(h, w, 3)`` uint8 pixels from
+    ``imaging.decode_image`` (PPM/PGM/BMP/PNG/JPEG/GIF/TIFF by magic).
+  * ``"webm"`` — ``(tracks, blocks)`` from ``ebml.parse_webm_blocks``.
+  * ``"tar"`` — ``[(name, size, bytes)]`` of the archive's regular members
+    with non-zero size; an empty, truncated or non-tar file fails as a
+    whole.
 """
 
 from __future__ import annotations
 
 import hashlib
+import io
+import tarfile
 from collections.abc import Iterator
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
@@ -58,6 +70,7 @@ from pyspark.sql.types import (
 )
 
 from dataflow_geobeam_spark import codecs
+from dataflow_geobeam_spark.functions import ebml, imaging
 
 METRIC_FIELDS = [
     StructField("decode_ok", BooleanType()),
@@ -66,7 +79,6 @@ METRIC_FIELDS = [
     StructField("rms", DoubleType()),
     StructField("peak", DoubleType()),
 ]
-DECODE_METRICS_TYPE = StructType(METRIC_FIELDS)
 _METRICS_FAILED = (False, 0, 0, 0.0, 0.0)
 
 
@@ -79,20 +91,32 @@ def _arrow_type(dt):
 
 
 class Clip(NamedTuple):
-    """One decoded clip as a ``per_clip`` kernel sees it."""
+    """One decoded payload as a ``per_clip`` kernel sees it."""
 
-    pcm: np.ndarray  # float32 mono PCM in [-1, 1]
-    sr: int  # declared rate if the row has one, else the decoded rate
+    data: object  # the decoder's output: float32 mono PCM in [-1, 1] for audio
+    sr: int | None  # declared rate if the row has one, else the decoded rate
     key: object  # value of the runner's ``key_col`` (None if unset)
     container: str  # codec label, or the sniffed container
 
 
-# decoder(buf, codec) -> (pcm, decoded sr, container); the only call sites
-# of codecs.decode / codecs.decode_sniffed in the per-clip kernels
+def _tar_members(buf) -> list[tuple[str, int, bytes]]:
+    """(name, size, bytes) of every regular, non-empty member of a tar
+    archive (``GeodatabaseSource``'s skip-empty rule,
+    ``geobeam/io.py:410-416``)."""
+    with tarfile.open(fileobj=io.BytesIO(bytes(buf))) as tf:
+        members = [m for m in tf.getmembers() if m.isfile() and m.size]
+        return [(m.name, m.size, tf.extractfile(m).read()) for m in members]
+
+
+# decoder(buf, codec) -> (data, decoded sr, container); the only decode
+# call sites of the per-payload kernels
 _DECODERS = {
     "codec": lambda buf, codec: (*codecs.decode(buf, codec), codec),
     "flac": lambda buf, codec: (*codecs.decode(bytes(buf), "flac"), "flac"),
     "sniff": lambda buf, codec: codecs.decode_sniffed(bytes(buf)),
+    "image": lambda buf, codec: (imaging.decode_image(bytes(buf)), None, "image"),
+    "webm": lambda buf, codec: (ebml.parse_webm_blocks(bytes(buf)), None, "webm"),
+    "tar": lambda buf, codec: (_tar_members(buf), None, "tar"),
 }
 
 
@@ -100,10 +124,10 @@ def _clip_rows(decode, per_clip, failed, buf, codec, sr, key) -> list:
     """Output tuples of one clip: ``per_clip``'s on success, ``failed``
     when the decode raises."""
     try:
-        pcm, sr_decoded, container = decode(buf, codec)
+        data, sr_decoded, container = decode(buf, codec)
     except Exception:  # noqa: BLE001 - any decode failure => wrapper's failure rows
         return failed
-    return per_clip(Clip(pcm, sr or sr_decoded, key, container))
+    return per_clip(Clip(data, sr or sr_decoded, key, container))
 
 
 def _payload(raw: bytes, digest: bool):
@@ -173,8 +197,8 @@ def clip_kernel(
       the output schema as given.
     * ``sr_col`` / ``key_col`` — columns read into ``Clip.sr`` (declared
       rate, falls back to the decoded one when null or 0) and ``Clip.key``.
-    * ``decoder`` — ``"codec"`` (reads ``codec_col``), ``"flac"`` or
-      ``"sniff"``.
+    * ``decoder`` — a ``_DECODERS`` key; only ``"codec"`` reads
+      ``codec_col`` (pass ``codec_col=None`` for the others).
     * ``on_fail`` — rows emitted for a clip that fails to decode (default:
       one row of NULL outputs; ``[]`` drops the clip).
     """
@@ -217,7 +241,7 @@ def clip_metrics(clip: Clip) -> list[tuple]:
     removed the shared ``audio_synth.pcm_metrics`` kernel so the fixture
     oracle (``fixtures.independent.metrics``) is a genuinely independent
     implementation of the same formula."""
-    pcm = clip.pcm
+    pcm = clip.data
     n = pcm.shape[0]
     rms = peak = 0.0
     if n:
@@ -258,23 +282,12 @@ def with_decoded_pcm(
     when the clip fails to decode."""
     return clip_kernel(
         df,
-        lambda c: [(c.pcm,)],
+        lambda c: [(c.data,)],
         [StructField("pcm", ArrayType(FloatType()))],
         keep=None if drop_bytes else df.schema.fields,
         bytes_col=bytes_col,
         codec_col=codec_col,
     )
-
-
-@pandas_udf(DECODE_METRICS_TYPE)
-def decode_metrics_struct(data: pd.Series, codec: pd.Series) -> pd.DataFrame:
-    """Expression-position variant (pandas UDF). Slower than the mapInArrow
-    path for large payloads; kept for composability inside select()."""
-    rows = [
-        _clip_rows(_DECODERS["codec"], clip_metrics, [_METRICS_FAILED], buf, c, None, None)[0]
-        for buf, c in zip(data.values, codec.values)
-    ]
-    return pd.DataFrame(rows, columns=DECODE_METRICS_TYPE.names)
 
 
 def expected_samples(sr_col: Column, dur_col: Column) -> Column:

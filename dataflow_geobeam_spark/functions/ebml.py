@@ -7,7 +7,7 @@ FLAC/JPEG/TIFF — EBML (RFC 8794) plus the Matroska/WebM element registry
 — so the metadata layer a video training pipeline actually needs first
 (which tracks exist, which codec, where the keyframes are, how large
 each frame payload is, the block timeline) is implemented here for real.
-Only the pixel decode inside each block stays honestly ffmpeg-gated.
+The pixel decode inside each block is not implemented.
 
 Scope: EBML header + Segment walk (known- or unknown-size Segment),
 Info (TimestampScale), Tracks (TrackEntry: number, type, CodecID),

@@ -10,15 +10,16 @@ are simple enough to implement from their published specs — the same
 stand-in strategy the audio side uses for its containers
 (fixtures/independent.py). PNG joined in round 5 (IHDR/IDAT + the five
 scanline filters over stdlib zlib) and baseline JPEG closes the set
-(markers + Huffman + integer IDCT, see the JPEG section); only video
-remains gated in functions/multimodal.py.
+(markers + Huffman + integer IDCT, see the JPEG section). Pixel decode
+inside video blocks is not implemented.
 
 Reference precedent: geobeam decodes real raster formats via rasterio
 (``/root/reference/geobeam/io.py:124-127``); here the format parsing is
 from-spec because the container ships no imaging libs.
 
-All functions are plain bytes/ndarray kernels — the Spark plumbing that
-batches them lives in functions/multimodal.py (mapInArrow).
+All functions are plain bytes/ndarray kernels: ``decode_image`` is the
+``"image"`` decoder of ``functions/decode.clip_kernel``, and the wrappers
+in functions/multimodal.py apply the rest per decoded image.
 """
 
 from __future__ import annotations
@@ -1015,8 +1016,7 @@ def decode_image(buf: bytes) -> np.ndarray:
     """Dispatch on magic bytes to a pure-Python decoder. PPM, PGM, BMP,
     PNG, baseline JPEG and GIF (round 5) are decoded here from spec —
     every still-image container in the sniffer registry; other containers
-    raise (callers fall back to the PIL gate / deterministic fake in
-    functions/multimodal.py)."""
+    raise ImageDecodeError."""
     if buf[:2] == b"P6":
         return decode_ppm(buf)
     if buf[:2] == b"P5":
@@ -1034,21 +1034,18 @@ def decode_image(buf: bytes) -> np.ndarray:
     raise ImageDecodeError(f"unsupported container (magic {buf[:4]!r})")
 
 
-def thumbnail_ppm(buf: bytes, width: int, height: int) -> bytes:
-    """decode (PPM/PGM/BMP) -> nearest-neighbor resize -> P6 PPM bytes:
-    the real end-to-end thumbnail kernel for the formats this repo decodes
-    from spec."""
-    return encode_ppm(resize_nearest(decode_image(buf), width, height))
+def centered_pixels(img: np.ndarray, width: int, height: int) -> np.ndarray:
+    """decoded image -> NN-resize -> mean-centered flat pixel vector
+    (float32, length width*height*3) — the embedding kernel for image
+    near-dup detection. Centering removes the brightness/DC component that
+    makes ALL positive-pixel images correlate (~0.75 cosine between
+    unrelated noise images uncentered; ~0 centered), so the cosine
+    threshold separates true near-dups. Mean computed in float64, cast
+    float32 — the contract the independent golden mirrors exactly."""
+    v = resize_nearest(img, width, height).reshape(-1).astype(np.float64)
+    return (v - v.mean()).astype(np.float32)
 
 
 def pixel_embedding(buf: bytes, width: int, height: int) -> np.ndarray:
-    """decode -> NN-resize -> mean-centered flat pixel vector (float32,
-    length width*height*3) — the embedding kernel for image near-dup
-    detection. Centering removes the brightness/DC component that makes
-    ALL positive-pixel images correlate (~0.75 cosine between unrelated
-    noise images uncentered; ~0 centered), so the cosine threshold
-    separates true near-dups. Mean computed in float64, cast float32 —
-    the contract the independent golden mirrors exactly."""
-    small = resize_nearest(decode_image(buf), width, height)
-    v = small.reshape(-1).astype(np.float64)
-    return (v - v.mean()).astype(np.float32)
+    """``centered_pixels`` of an encoded image."""
+    return centered_pixels(decode_image(buf), width, height)

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataflow_geobeam_spark.functions.decode import expected_samples
+from dataflow_geobeam_spark.functions.decode import expected_samples, with_decoded_metrics
 
 KNOWN_CODECS = ("wav", "flac", "ogg", "mp3")
 
@@ -58,3 +58,12 @@ def filter_invalid(df: DataFrame, tolerance: float = 0.1) -> DataFrame:
     """Keep only valid clips. Mirrors beam.Filter(filter_invalid),
     ``/root/reference/geobeam/examples/shapefile_nfhl.py:41``."""
     return df.where(valid_clip_predicate(tolerance=tolerance))
+
+
+def decode_and_filter(clips: DataFrame) -> DataFrame:
+    """Cheap precheck -> vectorized decode -> validity: the decode prefix
+    of the batch and the streaming flagship. The precheck runs BEFORE the
+    decode UDF so rows with unknown codecs or null payloads never cross
+    the JVM->Python boundary (nodata-mask analog,
+    ``geobeam/io.py:224,235``)."""
+    return filter_invalid(with_decoded_metrics(clips.where(precheck_predicate())))

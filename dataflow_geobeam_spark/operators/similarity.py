@@ -770,67 +770,6 @@ def pq_encode(
     return in_df.mapInArrow(_encode, out_schema)
 
 
-def ivfpq_index(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_cells: int,
-    books: np.ndarray,
-    seed: int = 42,
-) -> DataFrame:
-    """(_id, cell, codes) — ONE mapInArrow pass fusing IVF cell assignment
-    (``ivf_assign`` with n_probe=1) and PQ encoding (``pq_encode``), bit-
-    identical math to running both separately. Round 5: replaces the
-    ``c_cells ⋈ c_codes`` self-join of the corpus inside ``ivfpq_topk`` —
-    at 10^9+ vectors that join re-shuffled the entire corpus by id just to
-    stitch two per-row columns computed from the same vector; fusing them
-    makes index construction a single scan with zero shuffle."""
-    m_sub, _k_codes, dsub = books.shape
-    if dim != m_sub * dsub:
-        raise ValueError(f"books shape {books.shape} does not tile dim={dim}")
-    cents = _centroids(dim, n_cells, seed)
-    id_field = df.schema[id_col].dataType
-    in_df = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    out_schema = sqltypes.StructType(
-        [
-            sqltypes.StructField("_id", id_field, False),
-            sqltypes.StructField("cell", sqltypes.IntegerType(), False),
-            sqltypes.StructField(
-                "codes", sqltypes.ArrayType(sqltypes.IntegerType()), False
-            ),
-        ]
-    )
-
-    def _index(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            flat = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            n = len(batch)
-            if flat.size != n * dim:
-                raise ValueError(f"{vec_col}: expected fixed dim={dim}")
-            v = flat.reshape(n, dim).astype(np.float64, copy=False)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            cells = ((v / norms) @ cents.T).argmax(axis=1).astype(np.int32)
-            vs = v.reshape(n, m_sub, dsub)
-            codes = np.empty((n, m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                d2 = ((vs[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            codes_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * m_sub, m_sub, dtype=np.int32)),
-                pa.array(codes.reshape(-1)),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(cells), codes_arr], names=["_id", "cell", "codes"]
-            )
-
-    return in_df.mapInArrow(_index, out_schema)
-
-
 def pq_adc_luts(Q: np.ndarray, books: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Driver-side ADC (asymmetric distance computation) lookup tables.
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from dataflow_geobeam_spark.fixtures import ensure_fixtures
 from dataflow_geobeam_spark.functions.decode import with_decoded_metrics
 from dataflow_geobeam_spark.functions.validity import (
-    filter_invalid,
+    decode_and_filter,
     precheck_predicate,
     valid_clip_predicate,
 )
@@ -30,14 +30,10 @@ from dataflow_geobeam_spark.util import epoch_seconds
 
 
 def decoded_valid_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared prefix: scan -> cheap precheck -> vectorized decode -> validity.
-
-    The precheck runs BEFORE the decode UDF so rows with unknown codecs or
-    null payloads never cross the JVM->Python boundary (nodata-mask analog,
-    ``geobeam/io.py:224,235``)."""
-    fx = ensure_fixtures(sf_dir)
-    df = read_clips(spark, fx).where(precheck_predicate())
-    return filter_invalid(with_decoded_metrics(df))
+    """Shared prefix: scan -> ``validity.decode_and_filter`` (cheap
+    precheck -> vectorized decode -> validity), the same prefix the
+    streaming flagship runs."""
+    return decode_and_filter(read_clips(spark, ensure_fixtures(sf_dir)))
 
 
 def audio_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -333,8 +333,8 @@ def image_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal image pipeline with a REAL decode kernel (round-4
     VERDICT #5): sniff container from magic bytes -> from-spec PPM/BMP
     decode -> nearest-neighbor resize -> P6 re-encode, all inside one
-    mapInArrow pass (functions/imaging.py kernels, functions/multimodal
-    plumbing). Truncated payloads surface as NULL thumbnails (F1
+    mapInArrow pass (functions/imaging.py kernels on the shared
+    functions/decode.clip_kernel runner). Truncated payloads surface as NULL thumbnails (F1
     decode-failure semantics). Oracle: generation-time golden computed by
     the independent regex/per-pixel-loop implementations in
     fixtures.independent."""
@@ -523,7 +523,7 @@ def video_block_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     one mapInArrow 1->N pass: every block's track, codec id, absolute
     timestamp, keyframe flag and payload size — the index a
     frame-sampling planner keys on, produced WITHOUT decoding a pixel
-    (that half stays honestly ffmpeg-gated). Truncated containers drop
+    (pixel decode is not implemented). Truncated containers drop
     (F1). Oracle: generation-time golden by the independent
     recursive-descent parser over files the independent writer produced."""
     from dataflow_geobeam_spark.fixtures.generate import ensure_video_clips

@@ -7,18 +7,15 @@ same contract: one row per file (path, modificationTime, length, content),
 parallel across files. Use for container formats that cannot be
 row-split (a zipped shapefile then; a .tar of audio clips now).
 
-The per-archive -> per-record explode runs in mapInArrow (batched), the
+The per-archive -> per-record explode runs on the shared payload runner
+(``functions/decode.clip_kernel``, decoder ``"tar"``), the
 ``read_records`` generator analog.
 """
 
 from __future__ import annotations
 
-import io
-import tarfile
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -26,6 +23,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from dataflow_geobeam_spark.functions.decode import clip_kernel
 
 MEMBER_SCHEMA = StructType(
     [
@@ -48,36 +47,18 @@ def read_binary_files(
 
 
 def explode_tar_members(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Archive rows -> one row per tar member (1->N generator, the
-    ``read_records`` analog; ``GeodatabaseSource``'s skip-empty behavior at
-    ``geobeam/io.py:410-416`` maps to dropping zero-byte members)."""
-    from dataflow_geobeam_spark.functions.decode import _binary_views
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            paths = batch.column(names.index("path")).to_pylist()
-            bufs = _binary_views(batch.column(names.index(content_col)))
-            out = {"archive": [], "member": [], "size": [], "bytes": []}
-            for p, buf in zip(paths, bufs):
-                if buf is None:
-                    continue
-                with tarfile.open(fileobj=io.BytesIO(bytes(buf))) as tf:
-                    for m in tf.getmembers():
-                        if not m.isfile() or m.size == 0:
-                            continue  # skip null/empty members
-                        out["archive"].append(p)
-                        out["member"].append(m.name)
-                        out["size"].append(m.size)
-                        out["bytes"].append(tf.extractfile(m).read())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["archive"], type=pa.string()),
-                    pa.array(out["member"], type=pa.string()),
-                    pa.array(out["size"], type=pa.int64()),
-                    pa.array(out["bytes"], type=pa.binary()),
-                ],
-                names=["archive", "member", "size", "bytes"],
-            )
-
-    return df.select("path", content_col).mapInArrow(fn, MEMBER_SCHEMA)
+    """Archive rows -> one row per regular, non-empty tar member (1->N
+    generator, the ``read_records`` analog; ``GeodatabaseSource``'s
+    skip-empty behavior at ``geobeam/io.py:410-416`` maps to dropping
+    zero-byte members). A null, empty, truncated or non-tar file gives no
+    rows."""
+    return clip_kernel(
+        df.select(F.col("path").alias("archive"), content_col),
+        lambda c: c.data,
+        MEMBER_SCHEMA.fields[1:],
+        keep=MEMBER_SCHEMA.fields[:1],
+        bytes_col=content_col,
+        codec_col=None,
+        decoder="tar",
+        on_fail=[],
+    )

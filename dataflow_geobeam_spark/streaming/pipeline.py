@@ -15,8 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dataflow_geobeam_spark.functions.decode import with_decoded_metrics
-from dataflow_geobeam_spark.functions.validity import precheck_predicate, valid_clip_predicate
+from dataflow_geobeam_spark.functions.validity import decode_and_filter
 from dataflow_geobeam_spark.sources.clips import CLIPS_SCHEMA
 from dataflow_geobeam_spark.streaming.sink import ExactlyOnceParquetSink
 
@@ -98,11 +97,9 @@ def stream_clips_dir(
 
 
 def decoded_valid_stream(clips: DataFrame, watermark: str = "2 minutes") -> DataFrame:
-    """Streaming form of plans.audio.decoded_valid_clips + watermark."""
-    df = clips.where(precheck_predicate())
-    df = with_decoded_metrics(df)
-    df = df.where(valid_clip_predicate())
-    return df.withWatermark("ts", watermark)
+    """Streaming form of plans.audio.decoded_valid_clips: the same
+    ``validity.decode_and_filter`` prefix, plus the watermark."""
+    return decode_and_filter(clips).withWatermark("ts", watermark)
 
 
 def windowed_agg_stream(decoded: DataFrame, duration: str = "10 seconds") -> DataFrame:

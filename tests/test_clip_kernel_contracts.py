@@ -2,7 +2,8 @@
 
 Each wrapper sees four rows: one clip it can decode, a null payload, a
 truncated payload its decoder rejects, and a payload with unknown magic
-under an unknown codec label. The test pins how many rows come out and
+under an unknown codec label (for the image, WebM and tar kernels: a
+payload of another container). The test pins how many rows come out and
 which output columns are null, per input row, so a change to the shared
 clip-kernel runner cannot silently move a wrapper from one failure
 behaviour to another:
@@ -133,5 +134,111 @@ def test_failed_decode_gives_zeroed_metrics(spark, label, wrapper, fmt):
 def test_failed_decode_gives_no_row(spark, label, wrapper, fmt, n_good):
     out, rows = _run(spark, wrapper, fmt)
     assert [r["clip_id"] for r in rows] == [GOOD] * n_good, label
+    for r in rows:
+        assert all(v is not None for v in r.values()), (label, r)
+
+
+# ---------------------------------------------------------------------------
+# binary-payload kernels: image, WebM, tar
+# ---------------------------------------------------------------------------
+
+
+def _image_payload() -> bytes:
+    from dataflow_geobeam_spark.fixtures import independent
+
+    img = (np.arange(6 * 8 * 3) * 7 % 256).astype(np.uint8).reshape(6, 8, 3)
+    return independent.ppm_bytes(img)
+
+
+def _wav_payload() -> bytes:
+    from dataflow_geobeam_spark import codecs
+
+    return codecs.encode_wav(np.zeros(800, dtype=np.float32), SR)
+
+
+def _webm_payload() -> bytes:
+    from dataflow_geobeam_spark.fixtures import independent
+
+    blocks = [(1, 0, True, b"\x01" * 40), (1, 33, False, b"\x02" * 40), (2, 10, True, b"\x03" * 9)]
+    return independent.webm_bytes([(1, "V_VP8"), (2, "A_OPUS")], [(0, blocks)])
+
+
+def _tar_payload() -> bytes:
+    import io
+    import tarfile
+
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for name, data in [("a.wav", b"A" * 3000), ("b.wav", b"B" * 3000), ("empty.wav", b"")]:
+            info = tarfile.TarInfo(name)
+            info.size = len(data)
+            tf.addfile(info, io.BytesIO(data))
+    return buf.getvalue()
+
+
+def _payload_rows(good: bytes, wrong: bytes) -> list[tuple]:
+    # a quarter of each good payload ends inside its pixel, block or member
+    # data (a tar cut inside its zero padding would still read cleanly)
+    return [(GOOD, good), (NULL, None), (BAD, good[: len(good) // 4]), (UNKNOWN, wrong)]
+
+
+def _image_embeddings(df):
+    from dataflow_geobeam_spark.functions.multimodal import with_image_embeddings
+
+    return with_image_embeddings(df, "img_id", "bytes", width=4, height=3)
+
+
+def _video_block_index(df):
+    from dataflow_geobeam_spark.functions.multimodal import with_video_block_index
+
+    return with_video_block_index(df)
+
+
+def _tar_members(df):
+    from dataflow_geobeam_spark.sources.binaryfiles import explode_tar_members
+
+    return explode_tar_members(df)
+
+
+def test_thumbnails_failed_decode_gives_null_row(spark):
+    """Every input column is kept; only the image that decodes gets a
+    thumbnail (a non-image payload gets NULL, not a stand-in)."""
+    from dataflow_geobeam_spark.functions.multimodal import with_thumbnails
+
+    rows = _payload_rows(_image_payload(), _wav_payload())
+    df = spark.createDataFrame(
+        [(i, b, "x") for i, b in rows], "img_id string, bytes binary, tag string"
+    )
+    out = with_thumbnails(df, width=4, height=3)
+    assert out.columns == ["img_id", "bytes", "tag", "thumbnail"]
+    got = {r.img_id: r for r in out.collect()}
+    assert sorted(got) == [GOOD, NULL, BAD, UNKNOWN]
+    for cid, payload in rows:
+        r = got[cid]
+        assert r.tag == "x" and (None if r.bytes is None else bytes(r.bytes)) == payload
+        assert (r.thumbnail is not None) == (cid == GOOD), (cid, r.thumbnail)
+    assert bytes(got[GOOD].thumbnail).startswith(b"P6\n4 3\n255\n")
+
+
+BINARY_NO_ROW = [
+    # (label, wrapper, input DDL, good payload, wrong container, rows the good payload yields)
+    ("image_embeddings", _image_embeddings, "img_id string, bytes binary",
+     _image_payload, _wav_payload, 1),
+    ("video_block_index", _video_block_index, "video_id string, bytes binary",
+     _webm_payload, _image_payload, 3),
+    ("tar_members", _tar_members, "path string, content binary",
+     _tar_payload, _wav_payload, 2),
+]
+
+
+@pytest.mark.parametrize(
+    "label,wrapper,ddl,good,wrong,n_good", BINARY_NO_ROW, ids=[c[0] for c in BINARY_NO_ROW]
+)
+def test_binary_failed_decode_gives_no_row(spark, label, wrapper, ddl, good, wrong, n_good):
+    df = spark.createDataFrame(_payload_rows(good(), wrong()), ddl)
+    rows = [r.asDict() for r in wrapper(df).collect()]
+    key = next(iter(rows[0])) if rows else None
+    assert len(rows) == n_good, (label, rows)
+    assert [r[key] for r in rows] == [GOOD] * n_good, label
     for r in rows:
         assert all(v is not None for v in r.values()), (label, r)

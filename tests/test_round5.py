@@ -166,35 +166,6 @@ def test_pq_kernels_handle_empty_and_match_reconstruction(spark):
     assert S.pq_adc_score_col(enc, books, lut_dot, lut_nrm, q_norm).count() == 0
 
 
-def test_ivfpq_index_matches_separate_passes(spark):
-    """The fused (cell, codes) index scan is bit-identical to running
-    ivf_assign(n_probe=1) and pq_encode separately (round-5 shuffle
-    removal must not change a single bit of the index)."""
-    import numpy as np
-
-    from dataflow_geobeam_spark.operators import similarity as S
-
-    rng = np.random.default_rng(13)
-    dim, m_sub, k_codes, n_cells, n = 32, 4, 8, 16, 300
-    books = S.train_pq_codebooks(rng.standard_normal((64, dim)), m_sub, k_codes)
-    vecs = rng.standard_normal((n, dim)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)], ["vec_id", "embedding"]
-    )
-    fused = {
-        r._id: (r.cell, tuple(r.codes))
-        for r in S.ivfpq_index(df, "vec_id", "embedding", dim, n_cells, books).collect()
-    }
-    cells = {r._id: r.cell
-             for r in S.ivf_assign(df, "vec_id", "embedding", dim, n_cells, 1).collect()}
-    codes = {r._id: tuple(r.codes)
-             for r in S.pq_encode(df, "vec_id", "embedding", dim, books).collect()}
-    assert fused == {i: (cells[i], codes[i]) for i in cells}
-    # fused index is ONE map stage: no exchange in the plan
-    plan = S.ivfpq_index(df, "vec_id", "embedding", dim, n_cells, books)
-    assert "Exchange" not in plan._jdf.queryExecution().executedPlan().toString()
-
-
 # ---------------------------------------------------------------------------
 # near_dup_pairs: corpus_n literal cap + n_planes="auto" (VERDICT #2, #4)
 # ---------------------------------------------------------------------------
